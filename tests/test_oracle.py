@@ -71,6 +71,22 @@ def test_engine_facade(spark, sf_dir):
     assert report["sorted_between"] and report["sorted_within"]
 
 
+def test_registry_inventory_is_pinned():
+    """Moving queries between modules must not change what is registered:
+    the name-sorted ``{name: oracle}`` map is pinned by its sha256. An
+    intended oracle edit updates the digest in the same change."""
+    import hashlib
+    import json
+
+    digest = hashlib.sha256(
+        json.dumps(sorted(_ORACLES.items())).encode()
+    ).hexdigest()
+    assert (len(_QUERIES), len(_ORACLES)) == (341, 339)
+    assert digest == (
+        "b5a3a6cb2ce33eb97c02d866570be9a7a2debb3be3834dda304ef216ea18a7cb"
+    )
+
+
 def test_grading_rotation_fronts_ungraded_queries():
     """The driver grades queries() in dict order with a ~50-entry
     budget; since r12 the rotation is TIERED (registry._graded_last):
