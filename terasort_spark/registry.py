@@ -18,8 +18,12 @@ Determinism conventions enforced by every registered query (D1–D6):
 
 from __future__ import annotations
 
+import glob
 import importlib
+import json
 import os
+import pkgutil
+import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -28,72 +32,6 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 _QUERIES: dict[str, QueryFn] = {}
 _ORACLES: dict[str, str] = {}
-
-# Modules that register operators on import. Order matters: the driver
-# grades queries() entries in dict order with a bounded budget, so modules
-# whose queries lack CORRECTNESS rows are imported first (the already-green
-# r1 entries are demoted to the back by _graded_last regardless).
-_OPERATOR_MODULES = (
-    "terasort_spark.operators.aggregates",  # agg_collect: failed r1, regrade first
-    "terasort_spark.operators.sessions",
-    "terasort_spark.functions.scalar",
-    "terasort_spark.functions.collections",
-    "terasort_spark.functions.udfs",
-    "terasort_spark.sources.tera_queries",
-    "terasort_spark.operators.llm_text",
-    "terasort_spark.operators.llm_dedup",
-    "terasort_spark.operators.llm_similarity",
-    "terasort_spark.operators.multimodal",
-    "terasort_spark.operators.composites",
-    "terasort_spark.operators.composites2",
-    "terasort_spark.operators.scans",
-    "terasort_spark.operators.projections",
-    "terasort_spark.operators.joins",
-    "terasort_spark.operators.windows",
-    "terasort_spark.operators.sorts",
-    "terasort_spark.operators.setops",
-    "terasort_spark.operators.extras",
-    "terasort_spark.operators.extras2",
-    "terasort_spark.operators.timeseries",
-    "terasort_spark.operators.pipelines",
-    "terasort_spark.operators.graph",
-    "terasort_spark.operators.relational3",
-    "terasort_spark.operators.relational4",
-    "terasort_spark.operators.relational5",
-    "terasort_spark.operators.pretrain",
-    "terasort_spark.operators.analytics",
-    "terasort_spark.operators.multimodal_audio",
-    "terasort_spark.operators.llm_gemm",
-    "terasort_spark.operators.llm_lm",
-    "terasort_spark.operators.modern",
-    "terasort_spark.operators.relational6",
-    "terasort_spark.operators.curation",
-    "terasort_spark.operators.geo",
-    "terasort_spark.operators.tokenizer",
-    "terasort_spark.operators.cdc",
-    "terasort_spark.operators.ml",
-    "terasort_spark.plans.similarity_rewrite",
-    "terasort_spark.operators.quality",
-    "terasort_spark.operators.boilerplate",
-    "terasort_spark.operators.rag",
-    "terasort_spark.operators.integrity",
-    "terasort_spark.operators.ann_index",
-    "terasort_spark.operators.wave7",
-    "terasort_spark.plans.mv_rewrite",
-    "terasort_spark.operators.wave8",
-    "terasort_spark.operators.wave10",
-    "terasort_spark.operators.wave11",
-    "terasort_spark.operators.wave12",
-    "terasort_spark.operators.wave13",
-    "terasort_spark.operators.wave14",
-    "terasort_spark.operators.wave15",
-    "terasort_spark.plans.window_skew_rewrite",
-    "terasort_spark.operators.wave16",
-    "terasort_spark.operators.wave17",
-    "terasort_spark.operators.wave18",
-    "terasort_spark.operators.wave19",
-    "terasort_spark.operators.wave20",
-)
 
 _loaded = False
 
@@ -114,43 +52,37 @@ def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryF
 
 
 def _load() -> None:
+    """Import every module of the package once; operators register on
+    import. ``__main__`` is the CLI, not an operator module."""
     global _loaded
     if _loaded:
         return
     _loaded = True
-    for mod in _OPERATOR_MODULES:
-        importlib.import_module(mod)
+    import terasort_spark
+
+    for info in pkgutil.walk_packages(terasort_spark.__path__, "terasort_spark."):
+        if not info.name.endswith(".__main__"):
+            importlib.import_module(info.name)
 
 
 # The driver grades registry entries in dict order with a bounded
-# per-round budget (~50), so entries without a hard CORRECTNESS row yet
-# must be yielded FIRST and already-proven ones last. The graded set is
-# derived from the committed CORRECTNESS_r*.json files themselves — the
-# rotation advances automatically each round, with two self-healing
-# rules: a query whose latest row FAILED re-fronts for regrade, and a
-# query graded rows-only before its oracle existed (err == "no_oracle"
-# but an oracle is registered now) re-fronts to earn a hash row.
+# per-round budget (~50). One rule spreads that budget: queries without a
+# current green CORRECTNESS row come first, in registration order; the
+# rest follow with the oldest green evidence first.
 _graded_cache: dict | None = None
 
 
 def _graded_rounds() -> dict:
-    """name -> round number of the query's LATEST green CORRECTNESS
-    row. Drives both membership (graded at all) and the staleness
-    rotation: with every query green, the ~50-slot per-round budget
-    re-grades the queries whose evidence is OLDEST (r11 VERDICT task
-    4 — ~50 rows dated r1-r3 under materially evolved code).
+    """name -> round number of the query's LATEST CORRECTNESS row, for
+    queries whose latest row is green. A rows-only row (err ==
+    "no_oracle") counts as green only while the query has no oracle.
 
     Files are ordered by PARSED round number, not filename sort: an
     unpadded name (CORRECTNESS_r2.json vs _r10.json) would otherwise
-    let a stale row override a newer one and mask a later FAILED grade
-    (r11 ADVICE)."""
+    let a stale row override a newer one and mask a later FAILED grade."""
     global _graded_cache
     if _graded_cache is not None:
         return _graded_cache
-    import glob
-    import json
-    import re
-
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     paths = []
     for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
@@ -168,129 +100,20 @@ def _graded_rounds() -> dict:
             for name, row in data.items():
                 if isinstance(row, dict):
                     latest[name] = (rnum, row)
-    done: dict[str, int] = {}
-    for name, (rnum, row) in latest.items():
-        if row.get("hash_match"):
-            done[name] = rnum
-        elif row.get("err") == "no_oracle" and name not in _ORACLES:
-            done[name] = rnum  # rows-only by declared design, recorded
-    global _ever_cache
-    _ever_cache = frozenset(latest)
-    _graded_cache = done
+    _graded_cache = {
+        name: rnum
+        for name, (rnum, row) in latest.items()
+        if row.get("hash_match")
+        or (row.get("err") == "no_oracle" and name not in _ORACLES)
+    }
     return _graded_cache
-
-
-_ever_cache: frozenset | None = None
-
-
-def _ever_graded() -> frozenset:
-    """Names with ANY committed CORRECTNESS row (green or not)."""
-    _graded_rounds()
-    return _ever_cache or frozenset()
-
-
-def _graded_names() -> frozenset:
-    return frozenset(_graded_rounds())
-
-# Never-graded entries pulled to the very front of the rotation so this
-# round's 50-entry budget lands on the highest-evidence-value rows first:
-# the 21 TPC-H shapes, the regrade slots (sink_parquet's now-existing
-# oracle, stream_dedup's new batch twin), the perf-flagged graph/gemm/
-# audio/bigram queries, and every remaining source format.
-_GRADE_FIRST = (
-    "sink_parquet", "stream_dedup", "stream_stateful", "late_data",
-    "stream_join",
-    "tpch_q2_shape", "tpch_q3_shape", "tpch_q4_shape", "tpch_q5_shape",
-    "tpch_q6_shape", "tpch_q7_shape", "tpch_q8_shape", "tpch_q9_shape",
-    "tpch_q10_shape", "tpch_q11_shape", "tpch_q12_shape", "tpch_q13_shape",
-    "tpch_q14_shape", "tpch_q15_shape", "tpch_q16_shape", "tpch_q17_shape",
-    "tpch_q18_shape", "tpch_q19_shape", "tpch_q20_shape", "tpch_q21_shape",
-    "tpch_q22_shape", "corr_scalar_subquery",
-    "graph_pagerank", "graph_triangles", "sim_cosine_gemm", "text_bigram_lm",
-    "multimodal_audio", "multimodal_framesample",
-    "source_csv", "source_jsonl", "source_orc", "source_text",
-    "source_binaryfile", "source_csv_permissive",
-    "text_contamination", "pack_sequences", "sample_mixture",
-    "events_funnel", "events_retention", "events_rfm", "events_anomaly",
-    "text_vocab_coverage", "emb_norm_stats", "text_tfidf", "text_tokens",
-    "etl_upsert", "etl_scd2", "ml_linreg",
-    # Round-6 pin: the 39 queries declared before round 6 but never
-    # driver-graded (VERDICT r5 "What's missing" #1). Listing them here
-    # guarantees they hold rotation slots 1-39 regardless of how many
-    # NEW round-6 queries register in earlier modules — the ~50-row
-    # budget must land on this backlog first. (All already sit in the
-    # ungraded front; this pin just makes the order edit-proof.)
-    "ts_interpolate", "pipeline_pretrain_funnel", "events_attribution",
-    "agg_weighted_percentile", "agg_entropy", "fn_variant", "sql_pipe",
-    "fn_collate", "source_xml", "text_chunk", "dedup_chunk",
-    "sim_cosine_mrl", "agg_sketch_rollup", "join_bloom",
-    "join_range_binned", "events_transitions", "profile_table",
-    "dq_expectations", "text_bm25", "sim_tfidf_cosine",
-    "dedup_incremental", "split_dataset", "sample_weighted",
-    "scan_zorder", "sim_containment", "fn_geo", "join_spatial_grid",
-    "text_bpe_train", "text_bpe_encode", "scan_changefeed",
-    "ivm_incremental_agg", "sink_merge", "ml_logreg",
-    "sim_join_autoplan", "text_ccnet_bucket", "dedup_soft",
-    "sample_temperature", "scan_timetravel", "ml_kfold",
-    # Round-6 additions, highest-evidence-value first: with ~50 rows
-    # per round and 39 backlog slots ahead, the tail of this list may
-    # spill to round 7 — put the flagship-adjacent operators first.
-    "pipeline_rag_retrieval", "sink_bucketed", "emb_kmeans",
-    "text_boilerplate", "ml_naivebayes", "ml_stump", "text_novelty",
-    "sample_stratified_alloc", "agg_gini", "events_ab_test",
-    "dq_outliers", "text_keywords", "text_readability",
-    "scan_rowgroup_stats", "win_gaps_islands", "text_zipf_fit",
-    "text_compression_ratio", "ml_auc", "text_dsir_weights",
-    "topk_skyline", "ml_calibration", "dq_ks_drift",
-    "sink_compacted", "dq_k_anonymity", "dedup_simhash",
-    "dedup_minhash",
-)
-
-
-# Queries whose OUTPUT changed this round (operator and oracle edited
-# together): their latest committed CORRECTNESS row predates the change,
-# so they must re-front for a fresh hash row even though _graded_names()
-# still lists them as green. Reviewed each round; emptied once regraded.
-# (r11 set — dedup_stream_lsh, ml_rouge, scan_vacuum — all earned green
-# r11 rows; emptied.)
-_REGRADE = ()
-
-# Green rows graded before this round are "stale evidence" and re-front
-# AHEAD of never-graded new declarations (r11 VERDICT task 2: the 55
-# r3/r4 rows predate materially evolved shared helpers; the 50-slot
-# driver budget must chase them before freshly-declared queries, which
-# are already proven by this round's own full drive_driver sweep and
-# get their driver row next round). Budget arithmetic for r12: 2
-# oracle-upgrade slots (agg_sketch_rollup/agg_percentile_approx re-front
-# via the no_oracle rule) + 12 r3 rows + 36 of the 43 r4 rows = 50.
-_FRESH_CUT = 5
 
 
 def _graded_last(d: dict) -> dict:
     rounds = _graded_rounds()
-    ever = _ever_graded()
-    graded = set(rounds) - set(_REGRADE)
-    # tier 0 — must-regrade: latest row FAILED, output changed this
-    # round (_REGRADE), or graded rows-only before its oracle existed
-    # (the no_oracle self-healing rule excludes these from `graded`).
-    urgent = [k for k in d if k in ever and k not in graded]
-    # tier 1 — stale green evidence (graded before _FRESH_CUT),
-    # oldest round first.
-    old = sorted(
-        (k for k in d if k in graded and rounds[k] < _FRESH_CUT),
-        key=lambda k: (rounds[k], k),
-    )
-    # tier 2 — never-graded new declarations (_GRADE_FIRST pins first).
-    new = [k for k in d if k not in ever]
-    pinned = [k for k in _GRADE_FIRST if k in new]
-    new = pinned + [k for k in new if k not in set(pinned)]
-    # tier 3 — remaining green rows, stalest first.
-    seen = set(urgent) | set(old) | set(new)
-    rest = sorted(
-        (k for k in d if k not in seen),
-        key=lambda k: (rounds.get(k, 0), k),
-    )
-    return {k: d[k] for k in urgent + old + new + rest}
+    ungraded = [k for k in d if k not in rounds]
+    graded = sorted((k for k in d if k in rounds), key=lambda k: (rounds[k], k))
+    return {k: d[k] for k in ungraded + graded}
 
 
 def queries() -> dict[str, QueryFn]:

@@ -19,8 +19,10 @@ empty; see SURVEY.md §0):
 - R5 sink: partition-indexed files are Spark's default part-NNNNN
   naming, so concatenating part files in index order yields a globally
   sorted dataset.
-- TeraValidate: order-within + order-between partitions, row count, and
-  an order-insensitive content checksum — invariants, not golden files.
+- TeraValidate: order-within + order-between partitions (in partition
+  index order), row count, and an order-insensitive content checksum —
+  invariants, not golden files — in one pass, plus per-partition sizes
+  and their skew.
 """
 
 from __future__ import annotations
@@ -29,7 +31,8 @@ import os
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import TaskContext
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 KEY_LEN = 10
@@ -161,34 +164,12 @@ def read_tera_files(spark: SparkSession, out_dir: str) -> DataFrame:
     )
 
 
-def _summarize_partitions(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Per-partition TeraValidate summary. mapInPandas hands batches in
-    partition order, so cross-batch ordering is checked too. Only one
-    tiny summary row per partition leaves the executor."""
-    first = last = None
-    n = 0
-    sorted_ok = True
-    for pdf in batches:
-        keys = pdf["key"]
-        if len(keys) == 0:
-            continue
-        kb = [bytes(k) for k in keys]
-        if first is None:
-            first = kb[0]
-        if last is not None and kb[0] < last:
-            sorted_ok = False
-        if any(kb[i] > kb[i + 1] for i in range(len(kb) - 1)):
-            sorted_ok = False
-        last = kb[-1]
-        n += len(kb)
-    yield pd.DataFrame(
-        {
-            "n": [n],
-            "first_key": [first.hex() if first is not None else None],
-            "last_key": [last.hex() if last is not None else None],
-            "sorted_ok": [sorted_ok],
-        }
-    )
+def record_hash() -> Column:
+    """Per-record checksum term, shared by ``checksum`` and
+    ``teravalidate``: the first 48 bits of md5(key || 0x00 || value),
+    as DECIMAL(20,0)."""
+    h = F.substring(F.md5(F.concat(F.col("key"), F.lit(b"\x00"), F.col("value"))), 1, 12)
+    return F.conv(h, 16, 10).cast("decimal(20,0)")
 
 
 def checksum(df: DataFrame) -> int:
@@ -196,34 +177,80 @@ def checksum(df: DataFrame) -> int:
     per-record 48-bit md5 prefixes, accumulated in DECIMAL(38,0) so the
     sum is exact at any row count (a long would overflow past ~2^15
     records x 48 bits)."""
-    h = F.substring(F.md5(F.concat(F.col("key"), F.lit(b"\x00"), F.col("value"))), 1, 12)
-    per_record = F.conv(h, 16, 10).cast("decimal(20,0)")
     total = df.select(
-        F.sum(per_record.cast("decimal(38,0)")).alias("s")
+        F.sum(record_hash().cast("decimal(38,0)")).alias("s")
     ).collect()[0]["s"]
     return int(total)
 
 
-def teravalidate(sorted_df: DataFrame) -> dict:
-    """TeraValidate invariants on a sorted DataFrame:
-    (a) keys non-decreasing within every partition,
-    (b) last key of partition i <= first key of partition i+1,
-    (c) row count preserved (caller compares),
-    Returns a dict with counts and booleans; raises nothing itself."""
-    schema = "n long, first_key string, last_key string, sorted_ok boolean"
-    # mapInPandas runs on the sorted partitions directly (no extra shuffle)
-    summaries = sorted_df.mapInPandas(_summarize_partitions, schema=schema).collect()
-    summaries = [r for r in summaries if r["n"] > 0]
-    summaries.sort(key=lambda r: bytes.fromhex(r["first_key"]))
-    within = all(r["sorted_ok"] for r in summaries)
-    between = all(
-        bytes.fromhex(summaries[i]["last_key"])
-        <= bytes.fromhex(summaries[i + 1]["first_key"])
-        for i in range(len(summaries) - 1)
+def _summarize_partitions(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """Per-partition TeraValidate summary: the task's partition index,
+    row count, first and last key, order within the partition and the
+    partition's checksum partial. mapInPandas hands batches in partition
+    order, so cross-batch ordering is checked too. Only one tiny summary
+    row per partition leaves the executor."""
+    first = last = None
+    n = total = 0
+    sorted_ok = True
+    for pdf in batches:
+        if pdf.empty:
+            continue
+        # object-array compares run the bytes comparison in a C loop
+        kb = pdf["key"].to_numpy()
+        if first is None:
+            first = bytes(kb[0])
+        if last is not None and bytes(kb[0]) < last:
+            sorted_ok = False
+        if len(kb) > 1 and not (kb[:-1] <= kb[1:]).all():
+            sorted_ok = False
+        last = bytes(kb[-1])
+        n += len(kb)
+        total += int(pdf["cs"].sum())
+    yield pd.DataFrame(
+        {
+            "index": [TaskContext.get().partitionId()],
+            "n": [n],
+            "first_key": [first.hex() if first is not None else None],
+            "last_key": [last.hex() if last is not None else None],
+            "sorted_ok": [sorted_ok],
+            "checksum": [str(total)],
+        }
     )
+
+
+def teravalidate(sorted_df: DataFrame) -> dict:
+    """TeraValidate invariants on a sorted DataFrame, in one pass:
+    (a) keys non-decreasing within every partition,
+    (b) last key of partition i <= first key of the next non-empty
+        partition, in partition INDEX order (the order the part files
+        concatenate in; ordering by first key would accept swapped
+        partitions),
+    (c) row count and content checksum (caller compares).
+    Also reports each partition's row count and the range partitioner's
+    skew (largest partition over the mean). Raises nothing itself."""
+    schema = (
+        "index int, n long, first_key string, last_key string, "
+        "sorted_ok boolean, checksum string"
+    )
+    # mapInPandas runs on the sorted partitions directly (no extra shuffle)
+    summaries = sorted(
+        sorted_df.select("key", record_hash().alias("cs"))
+        .mapInPandas(_summarize_partitions, schema=schema)
+        .collect(),
+        key=lambda r: r["index"],
+    )
+    sizes = [r["n"] for r in summaries]
+    filled = [r for r in summaries if r["n"] > 0]
+    mean = sum(sizes) / len(sizes) if sizes else 0
     return {
-        "n_rows": sum(r["n"] for r in summaries),
-        "n_partitions": len(summaries),
-        "sorted_within": within,
-        "sorted_between": between,
+        "n_rows": sum(sizes),
+        "n_partitions": len(filled),
+        "sorted_within": all(r["sorted_ok"] for r in filled),
+        "sorted_between": all(
+            bytes.fromhex(a["last_key"]) <= bytes.fromhex(b["first_key"])
+            for a, b in zip(filled, filled[1:])
+        ),
+        "checksum": sum(int(r["checksum"]) for r in summaries),
+        "partition_sizes": sizes,
+        "skew": round(max(sizes) / mean, 4) if mean else 0.0,
     }

@@ -31,6 +31,7 @@ def test_cli_gen_sort_validate_roundtrip(spark, tmp_path, capsys):
     report = json.loads(capsys.readouterr().out)
     assert report["n_rows"] == 20000
     assert report["sorted_within"] and report["sorted_between"]
+    assert sum(report["partition_sizes"]) == 20000 and report["skew"] >= 1.0
 
     # the UNSORTED directory must FAIL validation (nonzero exit) —
     # the scriptable contract a validator exists for

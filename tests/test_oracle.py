@@ -87,70 +87,22 @@ def test_registry_inventory_is_pinned():
     )
 
 
-def test_grading_rotation_fronts_ungraded_queries():
-    """The driver grades queries() in dict order with a ~50-entry
-    budget; since r12 the rotation is TIERED (registry._graded_last):
-    tier 0 = urgent regrades (latest row FAILED, output changed this
-    round, or graded rows-only before its oracle existed), tier 1 =
-    stale green rows (graded before _FRESH_CUT) oldest-first, tier 2 =
-    never-graded new declarations, tier 3 = remaining green rows
-    stalest-first. This test derives the expected tiers from the same
-    committed CORRECTNESS_r*.json files the rotation reads, so future
-    driver rounds advance it without re-breaking the invariant."""
+def test_grading_rotation_fronts_ungraded_queries(monkeypatch):
+    """The driver grades queries() in dict order with a ~50-entry budget.
+    One rule orders it: queries without a current green CORRECTNESS row
+    first, in registration order, then the rest by (latest green round,
+    name), so the oldest evidence is regraded next."""
     from terasort_spark import registry
 
-    order = list(registry.queries())
-    pos = {n: i for i, n in enumerate(order)}
     rounds = registry._graded_rounds()
-    ever = registry._ever_graded()
-    graded = set(rounds) - set(registry._REGRADE)
+    order = list(registry.queries())
+    keys = [(rounds[n], n) for n in order if n in rounds]
+    assert keys == sorted(keys)
+    assert order[: len(order) - len(keys)] == [n for n in order if n not in rounds]
 
-    def tier(n):
-        if n in ever and n not in graded:
-            return 0
-        if n in graded and rounds[n] < registry._FRESH_CUT:
-            return 1
-        if n not in ever:
-            return 2
-        return 3
-
-    tiers = [tier(n) for n in order]
-    assert tiers == sorted(tiers), [
-        (n, t) for n, t in zip(order, tiers)
-    ][:20]
-    # within tiers 1 and 3, stalest evidence first
-    for want in (1, 3):
-        rs = [rounds[n] for n, t in zip(order, tiers) if t == want]
-        assert rs == sorted(rs)
-    # Self-healing rules: a rows-only row whose oracle now exists, and
-    # a FAILED latest row, must both be tier 0 (before everything).
-    import glob
-    import json
-    import os
-    import re
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(registry.__file__)))
-    latest = {}
-    paths = []
-    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if m:
-            paths.append((int(m.group(1)), path))
-    for _, path in sorted(paths):
-        data = json.load(open(path))
-        for name, row in data.items():
-            if isinstance(row, dict):
-                latest[name] = row
-    oracles = registry.oracle_sql()
-    for name, row in latest.items():
-        if name not in pos:
-            continue
-        if row.get("err") == "no_oracle" and name in oracles:
-            assert tier(name) == 0, (
-                f"{name}: rows-only row but oracle now registered"
-            )
-        if not row.get("hash_match") and row.get("err") != "no_oracle":
-            assert tier(name) == 0, f"{name}: failed row must re-front"
+    monkeypatch.setattr(registry, "_graded_cache", {"a": 3, "b": 1, "c": 3})
+    got = registry._graded_last(dict.fromkeys(["c", "new2", "a", "b", "new1"]))
+    assert list(got) == ["new2", "new1", "b", "a", "c"]
 
 
 def test_engine_explain_returns_plan_text(spark, sf_dir):

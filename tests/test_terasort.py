@@ -38,6 +38,25 @@ def test_terasort_total_order_and_content(spark):
     assert report["sorted_within"], report
     assert report["sorted_between"], report
     assert checksum(out) == in_checksum  # permutation, nothing lost/changed
+    assert report["checksum"] == in_checksum  # the same sum, in the one pass
+    sizes = report["partition_sizes"]
+    assert len(sizes) == PARTS and sum(sizes) == N
+    assert report["skew"] == round(max(sizes) / (N / PARTS), 4) >= 1.0
+
+
+def test_teravalidate_checks_partition_index_order(spark):
+    """Two internally sorted partitions whose INDEX order is not sorted
+    (first keys 0900 then 0100) must fail the between-partition check:
+    the part files concatenate in index order, so re-ordering the
+    partitions by first key would accept a swapped output."""
+    rows = [(k.encode(), b"v") for k in ("0900", "0950", "0100", "0150", "0170")]
+    df = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, 2), "key binary, value binary"
+    )
+    report = teravalidate(df)
+    assert report["sorted_within"], report
+    assert report["sorted_between"] is False, report
+    assert report["partition_sizes"] == [2, 3] and report["skew"] == 1.2
 
 
 def test_terasort_plan_uses_range_exchange(spark):
