@@ -1,7 +1,7 @@
 """graph_cc_star scale probe (round 12): turn the "O(log n) rounds
 regardless of component diameter" claim from prose into measured
 curves, on exactly the loop the graded query runs
-(wave17.star_components — shared, not re-implemented).
+(graph.star_components — shared, not re-implemented).
 
 Two sweeps:
 
@@ -49,7 +49,7 @@ def _union_find(edges):
 
 
 def probe_lsh(spark, sf_dir):
-    from terasort_spark.operators.wave17 import _lsh_edges, star_components
+    from terasort_spark.operators.graph import _lsh_edges, star_components
 
     t0 = time.time()
     e = _lsh_edges(spark, sf_dir, tau=0.8, cap=8).localCheckpoint(eager=True)
@@ -75,7 +75,7 @@ def probe_lsh(spark, sf_dir):
 def probe_chain(spark, n):
     from pyspark.sql import functions as F
 
-    from terasort_spark.operators.wave17 import star_components
+    from terasort_spark.operators.graph import star_components
 
     e = (
         spark.range(n - 1)

@@ -40,7 +40,7 @@ if REPO not in sys.path:
 import pandas as pd  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
-from terasort_spark.operators.wave15 import (  # noqa: E402
+from terasort_spark.operators.sessions import (  # noqa: E402
     _ROCKSDB_PROVIDER,
     _ensure_state_codec,
 )

@@ -154,3 +154,88 @@ def fn_hash(spark, sf_dir):
         F.sha2(F.col("text"), 256).alias("text_sha256"),
         F.md5(F.concat(F.col("lang"), F.lit(":"), F.col("text"))).alias("salted_md5"),
     )
+
+
+@register(
+    "fn_sequence",
+    # The oracle unrolls the three slots as start + k*INTERVAL rather
+    # than using generate_series: DuckDB's generate_series accumulates
+    # the step ITERATIVELY (Jan 29 -> Feb 28 -> Mar 28, the clamp
+    # sticks), while Spark's sequence() computes start + k*month
+    # (Jan 29 + 2 months = Mar 29). The two agree except for month-end
+    # dates crossing February — absent at sf0.01, 5 rows at sf0.1.
+    oracle="""
+SELECT o_orderkey, CAST(unnest([
+           o_orderdate,
+           o_orderdate + INTERVAL 1 MONTH,
+           o_orderdate + INTERVAL 2 MONTH
+       ]) AS DATE) AS bill_month
+FROM orders
+WHERE o_orderkey % 1000 = 0
+""",
+)
+def fn_sequence(spark, sf_dir):
+    """Date-sequence generation (calendar spine): three monthly billing
+    dates per order — sequence() + explode, the idiom behind date
+    scaffolds, gap-filling, and schedule expansion. DuckDB twin is
+    generate_series + unnest.
+
+    Scale notes: explode multiplies rows by a bounded constant (3) in
+    the scan stage — narrow transformation, no shuffle; the o_orderkey
+    filter reaches the parquet scan first."""
+    o = table(spark, sf_dir, "orders")
+    return (
+        o.where(F.col("o_orderkey") % 1000 == 0)
+        .select(
+            "o_orderkey",
+            F.explode(
+                F.sequence(
+                    # o_orderdate is stored as TIMESTAMP (FIXTURES.md);
+                    # spine slots are calendar DATEs on both engines.
+                    F.col("o_orderdate").cast("date"),
+                    F.add_months(F.col("o_orderdate").cast("date"), 2),
+                    F.expr("INTERVAL 1 MONTH"),
+                )
+            ).alias("bill_month"),
+        )
+    )
+
+
+@register(
+    "fn_array2",
+    oracle="""
+SELECT doc_id,
+       list_bool_or(list_transform(string_split(text, ' '), w -> length(w) > 8))
+           AS any_long,
+       list_bool_and(list_transform(string_split(text, ' '), w -> length(w) > 1))
+           AS all_multichar,
+       CAST(list_position(string_split(text, ' '), 'data') AS INTEGER) AS data_pos,
+       array_to_string(list_slice(string_split(text, ' '), 1, 5), '_') AS joined5,
+       array_to_string(
+           list_sort(list_transform([1, 2, 3], i -> CAST(i * 10 AS BIGINT))),
+           '|') AS tens
+FROM documents
+WHERE doc_id < 100
+""",
+)
+def fn_array2(spark, sf_dir):
+    # exists/forall/array_position/array_join + a constructed literal
+    # array — the predicate HOFs that replace per-row Python loops.
+    d = table(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
+    toks = F.split(F.col("text"), " ")
+    return d.select(
+        "doc_id",
+        F.exists(toks, lambda w: F.length(w) > 8).alias("any_long"),
+        F.forall(toks, lambda w: F.length(w) > 1).alias("all_multichar"),
+        F.array_position(toks, "data").cast("int").alias("data_pos"),
+        F.array_join(F.slice(toks, 1, 5), "_").alias("joined5"),
+        F.array_join(
+            F.sort_array(
+                F.transform(
+                    F.array(F.lit(1), F.lit(2), F.lit(3)),
+                    lambda i: (i * 10).cast("long"),
+                )
+            ).cast("array<string>"),
+            "|",
+        ).alias("tens"),
+    )

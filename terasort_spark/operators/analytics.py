@@ -1087,3 +1087,307 @@ def dq_benford(spark, sf_dir):
         rnd(pct_raw, "pct"),
         rnd(pct_raw - benford, "dev"),
     )
+
+
+# ---------------------------------------------------------------------------
+# dq_volume_anomaly
+
+_VOL_WIN = 7
+_VOL_K = 3
+
+
+# ``dq_volume_anomaly`` — day-over-day volume monitoring: each day's
+# event count vs the trailing-7-day mean ± 3σ from exact integer
+# sufficient statistics — the freshness/volume tripwire a pipeline
+# dashboard runs before trusting a day's data.
+@register(
+    "dq_volume_anomaly",
+    oracle=f"""
+WITH daily AS (
+    SELECT CAST(ts AS DATE) AS d, CAST(count(*) AS BIGINT) AS n
+    FROM events GROUP BY 1
+),
+w AS (
+    SELECT d, n,
+           CAST(sum(n) OVER trail AS BIGINT) AS s7,
+           CAST(sum(n * n) OVER trail AS BIGINT) AS ss7,
+           CAST(count(*) OVER trail AS BIGINT) AS c7
+    FROM daily
+    WINDOW trail AS (ORDER BY d ROWS BETWEEN {_VOL_WIN} PRECEDING
+                     AND 1 PRECEDING)
+)
+SELECT d AS day, n,
+       {o_rnd("CAST(s7 AS DOUBLE) / c7", "trail_mean")},
+       (abs(n - CAST(s7 AS DOUBLE) / c7) >
+        {_VOL_K} * sqrt(CAST(ss7 AS DOUBLE) / c7
+                        - (CAST(s7 AS DOUBLE) / c7)
+                          * (CAST(s7 AS DOUBLE) / c7))) AS is_anomaly
+FROM w WHERE c7 = {_VOL_WIN}
+""",
+)
+def dq_volume_anomaly(spark, sf_dir):
+    """Volume tripwire: each day's event count against the trailing
+    7-day mean ± 3 population-σ, computed from EXACT integer
+    sufficient statistics (Σn, Σn² over the trailing window — counts
+    are integers, so the moments are partition-invariant; only the
+    final mean/σ touch doubles, identically ordered in the oracle).
+    Days without a full 7-day history are skipped, not guessed.
+
+    The first check a pipeline dashboard runs before trusting a day's
+    load: a crawler stall or duplicate-ingest bug shows up as a
+    volume cliff/spike long before content-level checks notice.
+    Daily counts are one map-combined groupBy; the trailing window
+    runs over the days-sized aggregate, not events — cost is
+    calendar-shaped, never corpus-shaped."""
+    daily = (
+        table(spark, sf_dir, "events")
+        .groupBy(F.to_date("ts").alias("d"))
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
+    )
+    trail = (
+        Window.orderBy("d").rowsBetween(-_VOL_WIN, -1)
+    )
+    w = daily.select(
+        "d",
+        "n",
+        F.sum("n").over(trail).cast("bigint").alias("s7"),
+        F.sum(F.col("n") * F.col("n")).over(trail).cast("bigint").alias("ss7"),
+        F.count(F.lit(1)).over(trail).cast("bigint").alias("c7"),
+    ).where(F.col("c7") == _VOL_WIN)
+    mean = F.col("s7").cast("double") / F.col("c7")
+    var = (
+        F.col("ss7").cast("double") / F.col("c7") - mean * mean
+    )
+    return w.select(
+        F.col("d").alias("day"),
+        "n",
+        rnd(mean, "trail_mean"),
+        (F.abs(F.col("n") - mean) > _VOL_K * F.sqrt(var)).alias("is_anomaly"),
+    )
+
+
+# --- events_transitions ---------------------------------------------------
+
+
+@register(
+    "events_transitions",
+    oracle="""
+WITH seq AS (
+    SELECT user_id, event_type,
+           lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id)
+               AS prev_type
+    FROM events
+)
+SELECT prev_type, event_type AS next_type, count(*) AS n
+FROM seq WHERE prev_type IS NOT NULL
+GROUP BY prev_type, next_type
+""",
+)
+def events_transitions(spark, sf_dir):
+    """First-order Markov transition matrix over per-user event
+    sequences: lag(event_type) within (user_id, ts-order), then a
+    global bigram count — the standard behavioural-analytics "what do
+    users do next" query and the event-stream twin of text_bigram_lm.
+
+    100 TB: one shuffle on user_id for the lag window (sessions are
+    small, so no skew), one map-side-combining count over a
+    |event_types|^2-bounded key space. Tie-break on event_id makes the
+    lag order — and therefore the counts — deterministic."""
+    ev = table(spark, sf_dir, "events")
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    return (
+        ev.withColumn("prev_type", F.lag("event_type").over(w))
+        .where(F.col("prev_type").isNotNull())
+        .groupBy("prev_type", F.col("event_type").alias("next_type"))
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+
+
+# --- profile_table --------------------------------------------------------
+
+_PROFILE_COLS = (
+    ("o_orderkey", "bigint"),
+    ("o_custkey", "bigint"),
+    ("o_orderstatus", "string"),
+    ("o_totalprice", "double"),
+    ("o_orderdate", "timestamp"),
+    ("o_orderpriority", "string"),
+)
+
+
+def _render(col, dtype):
+    """Engine-portable string rendering of a min/max value: fixed 2dp
+    for doubles (format_string ~ printf), explicit timestamp format —
+    never a bare double/timestamp->string cast, whose shortest-repr
+    rules differ between engines."""
+    if dtype == "double":
+        return F.format_string("%.2f", col)
+    if dtype == "timestamp":
+        return F.date_format(col, "yyyy-MM-dd HH:mm:ss")
+    return col.cast("string")
+
+
+def _o_render(expr, dtype):
+    if dtype == "double":
+        return f"printf('%.2f', {expr})"
+    if dtype == "timestamp":
+        return f"strftime({expr}, '%Y-%m-%d %H:%M:%S')"
+    return f"CAST({expr} AS VARCHAR)"
+
+
+@register(
+    "profile_table",
+    oracle="\nUNION ALL\n".join(
+        f"""SELECT '{c}' AS col_name,
+       count(*) - count({c}) AS n_nulls,
+       count(DISTINCT {c}) AS n_distinct,
+       {_o_render(f"min({c})", t)} AS min_s,
+       {_o_render(f"max({c})", t)} AS max_s
+FROM orders"""
+        for c, t in _PROFILE_COLS
+    ),
+)
+def profile_table(spark, sf_dir):
+    """Table profiling: per-column null count, exact distinct count,
+    and min/max (rendered portably) for every column of `orders` — the
+    data-quality summary every ingestion pipeline runs before
+    training-data admission. Output is 6 rows regardless of input size.
+
+    100 TB design, two passes with bounded shuffles: (1) nulls +
+    min/max for ALL columns in one distinct-free aggregation —
+    map-side partials collapse to one row per partition. (2) exact
+    distinct counts via unpivot-then-two-level-groupBy: stack each row
+    into narrow (col_name, value) pairs, groupBy(col_name, value) —
+    whose map-side combine means the exchange carries only each
+    column's DISTINCT set, not the row stream — then count per column.
+    The earlier single-agg multi-countDistinct form made Catalyst
+    Expand every row ×(cols+1) into one fat exchange (~7× the table
+    through the shuffle); this form shuffles Σ|distinct(c)| narrow
+    rows. Swap stage 2 for approx_count_distinct and the whole profile
+    is a single combining pass (agg_approx shows that surface)."""
+    o = table(spark, sf_dir, "orders")
+    aggs = []
+    for c, t in _PROFILE_COLS:
+        aggs += [
+            F.sum(F.col(c).isNull().cast("bigint")).alias(f"nn_{c}"),
+            _render(F.min(F.col(c)), t).alias(f"mn_{c}"),
+            _render(F.max(F.col(c)), t).alias(f"mx_{c}"),
+        ]
+    stack_base = ", ".join(
+        f"'{c}', nn_{c}, mn_{c}, mx_{c}" for c, _ in _PROFILE_COLS
+    )
+    base = o.agg(*aggs).selectExpr(
+        f"stack({len(_PROFILE_COLS)}, {stack_base})"
+        " AS (col_name, n_nulls, min_s, max_s)"
+    )
+    stack_vals = ", ".join(
+        f"'{c}', CAST({c} AS STRING)" for c, _ in _PROFILE_COLS
+    )
+    nd = (
+        o.selectExpr(
+            f"stack({len(_PROFILE_COLS)}, {stack_vals}) AS (col_name, v)"
+        )
+        .filter(F.col("v").isNotNull())
+        .groupBy("col_name", "v")
+        .agg(F.lit(1))
+        .groupBy("col_name")
+        .agg(F.count(F.lit(1)).alias("n_distinct"))
+    )
+    # Left join + coalesce: an all-NULL (or empty-table) column has no
+    # nd row, but its profile row must still appear with n_distinct=0 —
+    # dropping exactly the pathological columns would defeat the profiler.
+    return base.join(F.broadcast(nd), "col_name", "left").select(
+        "col_name",
+        "n_nulls",
+        F.coalesce(F.col("n_distinct"), F.lit(0)).alias("n_distinct"),
+        "min_s",
+        "max_s",
+    )
+
+
+@register(
+    "dq_expectations",
+    oracle="""
+SELECT 'orderkey_unique' AS check_name,
+       CAST(count(*) - count(DISTINCT o_orderkey) AS BIGINT) AS n_violations
+FROM orders
+UNION ALL
+SELECT 'custkey_not_null',
+       CAST(count(*) FILTER (WHERE o_custkey IS NULL) AS BIGINT)
+FROM orders
+UNION ALL
+SELECT 'custkey_fk_valid', CAST(count(*) AS BIGINT)
+FROM orders o LEFT JOIN customer c ON o.o_custkey = c.c_custkey
+WHERE c.c_custkey IS NULL
+UNION ALL
+SELECT 'totalprice_positive',
+       CAST(count(*) FILTER (WHERE o_totalprice <= 0) AS BIGINT)
+FROM orders
+UNION ALL
+SELECT 'orderdate_in_range',
+       CAST(count(*) FILTER (
+           WHERE o_orderdate < TIMESTAMP '1992-01-01'
+              OR o_orderdate >= TIMESTAMP '1999-01-01') AS BIGINT)
+FROM orders
+""",
+)
+def dq_expectations(spark, sf_dir):
+    """Data-quality expectations (the Deequ / dbt-tests shape): declared
+    constraints validated in bulk, one row per check with its violation
+    count — uniqueness of the key, non-null and referentially valid
+    foreign key, value range, date window. The gate every ingest runs
+    before data is admitted downstream.
+
+    Scale design: the four column checks share ONE scan (conditional
+    aggregates, map-side combined — adding a check adds a column, not a
+    pass); the referential check is a single anti-join against the
+    dimension's key column (broadcast when dimension-sized; the scan
+    prunes to the key via ReadSchema). Violation counts rather than
+    booleans so triage starts from the same query that gated."""
+    o = table(spark, sf_dir, "orders")
+    c = table(spark, sf_dir, "customer").select("c_custkey")
+    # Each SUM is coalesced to 0: on an empty table SUM is NULL while
+    # the oracle's count(*) FILTER is 0, and a NULL violation count
+    # would violate the repo's empty-input-safety principle.
+    scan = o.agg(
+        (F.count(F.lit(1)) - F.countDistinct("o_orderkey"))
+        .cast("bigint")
+        .alias("orderkey_unique"),
+        F.coalesce(F.sum(F.col("o_custkey").isNull().cast("bigint")), F.lit(0))
+        .cast("bigint")
+        .alias("custkey_not_null"),
+        F.coalesce(F.sum((F.col("o_totalprice") <= 0).cast("bigint")), F.lit(0))
+        .cast("bigint")
+        .alias("totalprice_positive"),
+        F.coalesce(
+            F.sum(
+                (
+                    (F.col("o_orderdate") < F.lit("1992-01-01").cast("timestamp"))
+                    | (
+                        F.col("o_orderdate")
+                        >= F.lit("1999-01-01").cast("timestamp")
+                    )
+                ).cast("bigint")
+            ),
+            F.lit(0),
+        )
+        .cast("bigint")
+        .alias("orderdate_in_range"),
+    )
+    fk = (
+        o.select("o_custkey")
+        .join(F.broadcast(c), o.o_custkey == c.c_custkey, "left_anti")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("custkey_fk_valid"))
+    )
+    wide = scan.crossJoin(F.broadcast(fk))
+    names = (
+        "orderkey_unique",
+        "custkey_not_null",
+        "custkey_fk_valid",
+        "totalprice_positive",
+        "orderdate_in_range",
+    )
+    stack = ", ".join(f"'{n}', {n}" for n in names)
+    return wide.selectExpr(
+        f"stack({len(names)}, {stack}) AS (check_name, n_violations)"
+    )

@@ -604,3 +604,88 @@ def sim_containment(spark, sf_dir):
         .filter(c >= CONTAIN_TAU)
         .select("a_id", "b_id", rnd(c, "containment"))
     )
+
+
+# --------------------------------------------------------------------------
+# sample_reservoir — fixed-SIZE uniform sample via priority hashing.
+
+_RESERVOIR_K = 100
+
+
+def _reservoir_oracle() -> str:
+    from terasort_spark.sources.tera_queries import mix32_sql
+
+    pri = mix32_sql("doc_id % 2147483648")
+    return f"""
+WITH pri AS (SELECT doc_id, ({pri}) AS priority FROM documents)
+SELECT CAST(row_number() OVER (ORDER BY priority, doc_id) AS BIGINT) AS rank,
+       doc_id, priority
+FROM pri ORDER BY priority, doc_id LIMIT {_RESERVOIR_K}
+"""
+
+
+@register("sample_reservoir", oracle=_reservoir_oracle())
+def sample_reservoir(spark, sf_dir):
+    """Fixed-size uniform sample (the distributed reservoir): assign
+    each row a content-addressed priority (mix32 of its id) and keep
+    the K smallest — exactly the "priority sampling" equivalence that
+    makes reservoir sampling mergeable across partitions. Unlike
+    scan_sample's Bernoulli fraction (output size varies with n), the
+    result is ALWAYS K rows, and unlike rand()-based reservoirs it is
+    partition- and retry-invariant: the kept set is a pure function of
+    the ids.
+
+    Scale: ORDER BY + LIMIT K compiles to TakeOrderedAndProject — each
+    partition keeps a K-row heap, the driver merges #partitions * K
+    rows; no global sort, no full shuffle. The id is folded mod 2^31
+    before mixing so 64-bit ids at 100 TB stay inside the mixer's
+    exact-arithmetic precondition."""
+    from terasort_spark.sources.tera_queries import mix32
+
+    d = table(spark, sf_dir, "documents").select(
+        "doc_id", mix32(F.col("doc_id") % F.lit(2147483648)).alias("priority")
+    )
+    top = d.orderBy("priority", "doc_id").limit(_RESERVOIR_K)
+    w = Window.orderBy("priority", "doc_id")
+    return top.select(
+        F.row_number().over(w).cast("bigint").alias("rank"),
+        "doc_id",
+        "priority",
+    )
+
+
+@register(
+    "sample_pergroup",
+    oracle="""
+SELECT lang, doc_id, h, rn FROM (
+    SELECT lang, doc_id, md5(CAST(doc_id AS VARCHAR)) AS h,
+           CAST(row_number() OVER (
+               PARTITION BY lang
+               ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id
+           ) AS INTEGER) AS rn
+    FROM documents
+) WHERE rn <= 50
+""",
+)
+def sample_pergroup(spark, sf_dir):
+    """Deterministic per-group sample: the 50 lowest-md5(doc_id) docs
+    per language. Content-addressed ranking means every rerun, retry,
+    and cluster size picks the SAME rows (unlike rand()-based samples),
+    and growing the corpus only ever swaps members at the hash boundary
+    — the reproducible "k per stratum" subsample a curation pipeline
+    pins in a datasheet.
+
+    Scale notes: rank-within-group plans a window with a group-limit
+    pushdown (each partition keeps only its local top-50 per lang before
+    the shuffle — same mechanism as topk_pergroup), so the exchange
+    carries at most 50·|langs| rows per partition regardless of corpus
+    size."""
+    d = table(spark, sf_dir, "documents").select(
+        "lang", "doc_id", F.md5(F.col("doc_id").cast("string")).alias("h")
+    )
+    w = Window.partitionBy("lang").orderBy("h", "doc_id")
+    return (
+        d.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= 50)
+        .select("lang", "doc_id", "h", "rn")
+    )

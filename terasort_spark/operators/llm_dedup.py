@@ -12,10 +12,13 @@ Scale design:
 
 from __future__ import annotations
 
+import shutil
+
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from terasort_spark.catalog import table
-from terasort_spark.operators._util import o_rnd, rnd, token_hash_mode
+from terasort_spark.operators._util import o_rnd, rnd, scratch_dir, token_hash_mode
 from terasort_spark.registry import register
 
 N_HASHES = 32  # minhash signature length
@@ -70,7 +73,7 @@ def dedup_exact(spark, sf_dir):
 def lsh_signatures(spark, sf_dir):
     """MinHash signatures + banded bucket keys for every document —
     the shared front of lsh_candidates (within-corpus pairs) and
-    wave8's dedup_fuzzy_ingest (cross-corpus candidates). Returns
+    dedup_fuzzy_ingest (cross-corpus candidates). Returns
     ``(sig, buckets)``: ``sig`` carries doc_id, toks and the mh0..mh{N}
     signature columns; ``buckets`` is (doc_id, band, bucket).
 
@@ -101,7 +104,7 @@ def lsh_signatures_df(docs):
     """lsh_signatures over an arbitrary (doc_id, text) DataFrame — the
     factor that lets STREAMING micro-batches compute the exact same
     signatures/band buckets as the batch corpus pass
-    (wave10.dedup_stream_lsh signs each arriving batch with this)."""
+    (dedup_stream_lsh signs each arriving batch with this)."""
     spark = docs.sparkSession
     d = docs.select(
         "doc_id", F.array_distinct(F.split(F.lower("text"), " ")).alias("toks")
@@ -185,7 +188,7 @@ def lsh_signatures_df(docs):
 
 def lsh_candidates(spark, sf_dir, per_doc_cap: int | None = None):
     """MinHash-LSH candidate generation — the shared front half of
-    minhash_pairs (exact-Jaccard verification) and wave8's
+    minhash_pairs (exact-Jaccard verification) and
     text_minhash_containment (signature-agreement estimation). Returns
     ``(sig, pairs)``: ``sig`` carries doc_id, toks and the mh0..mh{N}
     signature columns; ``pairs`` is the banded candidate set
@@ -279,7 +282,7 @@ def lsh_buckets_sql() -> str:
     polynomial band buckets — every stage exact integer. Ends with CTE
     ``buckets(doc_id, band, bucket)``; ``d`` (doc_id, toks), ``th_t``
     and ``sig`` (mh0..mh31) stay visible to callers. Shared by
-    lsh_candidates_sql and wave8's cross-corpus fuzzy-ingest oracle."""
+    lsh_candidates_sql and the cross-corpus fuzzy-ingest oracle."""
     h28 = (
         "((strpos('0123456789abcdef', substr(md5(t),1,1))-1)*16777216"
         " + (strpos('0123456789abcdef', substr(md5(t),2,1))-1)*1048576"
@@ -327,7 +330,7 @@ def lsh_candidates_sql(cap: int = 8) -> str:
     and the cap-smallest per-doc cap — the replay of
     ``lsh_candidates(per_doc_cap=cap)``. Ends with CTE
     ``capped(b_id, a_id)``. Shared by lsh_pairs_sql (exact-Jaccard
-    verification) and wave8's containment oracle (signature-agreement
+    verification) and text_minhash_containment's oracle (signature-agreement
     estimation)."""
     return f"""{lsh_buckets_sql()},
 grouped AS MATERIALIZED (
@@ -733,4 +736,1156 @@ def dedup_urlnorm(spark, sf_dir):
         d.select("doc_id", canonical_url("url").alias("canonical"))
         .groupBy("canonical")
         .agg(F.min("doc_id").alias("keep_id"), F.count(F.lit(1)).alias("n_variants"))
+    )
+
+
+# ---------------------------------------------------------------------------
+# dedup_probabilistic — Bloom-filter cross-snapshot admission gate.
+#
+# dedup_incremental (curation.py) answers "which batch docs are new?"
+# with an exact hash anti-join: the EXISTING corpus's full hash set
+# rides the shuffle every ingest. At 100 TB the existing side is the
+# whole corpus; the standing structure a recurring crawl actually keeps
+# is a Bloom filter over existing content hashes — M bits NO MATTER HOW
+# MANY DOCUMENTS — and the exact join runs only for the Bloom-positive
+# (suspected-duplicate) sliver. No false negatives: a Bloom miss is
+# PROOF the doc is new, so fast-path docs skip the corpus join entirely.
+
+BLOOM_W = 32  # bits per word; the filter broadcasts as an M/W-entry map
+BLOOM_K = 2  # hash functions per key
+BLOOM_BITS_PER_KEY = 10  # M sized from the existing-hash count
+#   (a fixed M saturates once distinct hashes exceed capacity and
+#   every batch doc routes 'verified'); with K=2 at 10 bits/key the
+#   false-positive rate is (1-e^(-K/10))^K ~= 3.3%, so the fast path
+#   keeps ~96% of genuinely-new docs out of the corpus join at EVERY
+#   scale. Both engines compute the identical M from the identical
+#   count, so the bitmap stays oracle-replayed.
+BLOOM_M_MIN = 1024
+
+
+def _bloom_m(n_existing: int) -> int:
+    """Filter bits: bits-per-key * existing keys, rounded up to a whole
+    word, floored at BLOOM_M_MIN. Positive ints only, so Python's //
+    agrees with DuckDB's truncating //."""
+    return max(
+        BLOOM_M_MIN,
+        (BLOOM_BITS_PER_KEY * n_existing + BLOOM_W - 1) // BLOOM_W * BLOOM_W,
+    )
+
+
+_BLOOM_M_SQL = (
+    f"GREATEST({BLOOM_M_MIN}, "
+    f"(({BLOOM_BITS_PER_KEY} * (SELECT count(*) FROM existing) + {BLOOM_W - 1}) "
+    f"// {BLOOM_W}) * {BLOOM_W})"
+)
+
+
+def _hex_int_sql(expr: str, nibbles: int) -> str:
+    """DuckDB integer from the first ``nibbles`` hex chars of ``expr``
+    (DuckDB lacks conv(); this is the llm_dedup h28 nibble-parse
+    pattern, parameterized)."""
+    terms = [
+        f"(strpos('0123456789abcdef', substr({expr},{i + 1},1))-1)*{16 ** (nibbles - 1 - i)}"
+        for i in range(nibbles)
+    ]
+    return "(" + " + ".join(terms) + ")"
+
+
+def _bloom_pos_sql(h_expr: str, k: int) -> str:
+    """Bit position k for key ``h_expr``: 32 bits of md5(h || '#k')
+    (16 bits would alias once the data-sized M exceeds 65536), mod the
+    data-sized M (a scalar subquery over the `mm` CTE) — the same
+    expression the Spark side evaluates with its driver-side M."""
+    md5_expr = f"md5({h_expr} || '#{k}')"
+    return f"({_hex_int_sql(md5_expr, 8)} % (SELECT m FROM mm))"
+
+
+def _bloom_pos_spark(h_col, k: int, m_col):
+    """``m_col`` is the data-sized M as a COLUMN (1-row scalar joined
+    in), so sizing never needs a separate driver action."""
+    return F.pmod(
+        F.conv(
+            F.substring(F.md5(F.concat(h_col, F.lit(f"#{k}"))), 1, 8), 16, 10
+        ).cast("long"),
+        m_col,
+    )
+
+
+def _probabilistic_oracle() -> str:
+    e_pos = ", ".join(_bloom_pos_sql("h", k) for k in range(BLOOM_K))
+    b_pos = ", ".join(_bloom_pos_sql("b.h", k) for k in range(BLOOM_K))
+    return f"""
+WITH existing AS MATERIALIZED (
+  SELECT DISTINCT md5(text) AS h FROM documents
+  WHERE doc_id % 5 = 0 AND text IS NOT NULL
+),
+batch AS MATERIALIZED (
+  SELECT md5(text) AS h, min(doc_id) AS doc_id,
+         CAST(count(*) AS BIGINT) AS n_copies
+  FROM documents WHERE doc_id % 5 <> 0 AND text IS NOT NULL
+  GROUP BY md5(text)
+),
+mm AS MATERIALIZED (
+  SELECT {_BLOOM_M_SQL} AS m
+),
+epos AS MATERIALIZED (
+  SELECT unnest([{e_pos}]) AS p FROM existing
+),
+words AS MATERIALIZED (
+  SELECT p // {BLOOM_W} AS widx,
+         bit_or(CAST(1 AS BIGINT) << (p % {BLOOM_W})) AS w
+  FROM epos GROUP BY p // {BLOOM_W}
+),
+probe AS MATERIALIZED (
+  SELECT h, bool_and(
+           w.w IS NOT NULL AND ((w.w >> (bp.p % {BLOOM_W})) & 1) = 1
+         ) AS might
+  FROM (SELECT b.h, unnest([{b_pos}]) AS p FROM batch b) bp
+  LEFT JOIN words w ON w.widx = bp.p // {BLOOM_W}
+  GROUP BY h
+)
+SELECT b.doc_id, b.h, b.n_copies,
+       CASE WHEN p.might THEN 'verified' ELSE 'fast' END AS path
+FROM batch b
+JOIN probe p USING (h)
+LEFT JOIN existing e USING (h)
+WHERE e.h IS NULL
+"""
+
+
+@register("dedup_probabilistic", oracle=_probabilistic_oracle())
+def dedup_probabilistic(spark, sf_dir):
+    """Bloom-gated incremental dedup: admit a crawl batch against the
+    existing corpus using an M-bit Bloom filter over existing content
+    hashes. Batch hashes the filter has DEFINITELY never seen are
+    admitted on the fast path (no corpus join at all — the no-false-
+    negative guarantee); Bloom-positive hashes go through the exact
+    anti-join, which clears false positives ('verified' path) and drops
+    true duplicates. Output = every admitted (new) doc with its batch
+    keep-id, copy count, and which path admitted it.
+
+    Oracle-replayed BITMAP: bit positions are 16 md5 bits of (h || '#k')
+    mod M, the words are bit_or aggregates — both engines build the
+    identical filter, so the fast/verified routing itself is
+    hash-checked, not just the final admitted set (join_bloom's oracle,
+    by contrast, only checks the answer). tests/test_wave8.py
+    additionally pins admitted == the exact anti-join and that NO
+    existing hash ever tests negative.
+
+    100 TB: the filter is M bits regardless of corpus size and ships as
+    a ~M/W-entry broadcast map; per-batch cost is one scan of the batch
+    plus an equi-join whose left side is only the Bloom-positive sliver
+    (true dups + ~(1-e^{{-Kn/M}})^K false positives). The md5 positions
+    are the oracle-parity mode; production swaps xxhash64 exactly as the
+    tokenHash dial does for the other sketches."""
+    d = table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
+    h = F.md5("text").alias("h")
+    # checkpoint pins ONE execution: the M-sizing aggregate, the
+    # bit-position build, and the verification anti-join all consume
+    # `existing`
+    existing = (
+        d.filter(F.col("doc_id") % 5 == 0)
+        .select(h)
+        .distinct()
+        .localCheckpoint(eager=False)
+    )
+    # data-sized M as a 1-row scalar (broadcast-joined below, never a
+    # driver action): the same bits-per-key formula as _bloom_m/the
+    # oracle's mm CTE
+    mm = existing.agg(
+        F.greatest(
+            F.lit(BLOOM_M_MIN),
+            (
+                (F.count(F.lit(1)) * BLOOM_BITS_PER_KEY + (BLOOM_W - 1))
+                / BLOOM_W
+            ).cast("long")
+            * BLOOM_W,
+        ).alias("m")
+    )
+    batch = (
+        d.filter(F.col("doc_id") % 5 != 0)
+        .select("doc_id", h)
+        .groupBy("h")
+        .agg(
+            F.min("doc_id").alias("doc_id"),
+            F.count(F.lit(1)).cast("bigint").alias("n_copies"),
+        )
+    )
+    # build: K positions per existing hash, OR'd into 32-bit words held
+    # in longs — bounded state (256 rows) whatever the corpus size
+    epos = existing.crossJoin(F.broadcast(mm)).select(
+        F.explode(
+            F.array(
+                *[
+                    _bloom_pos_spark(F.col("h"), k, F.col("m"))
+                    for k in range(BLOOM_K)
+                ]
+            )
+        ).alias("p")
+    )
+    words = epos.groupBy(
+        (F.col("p") / BLOOM_W).cast("long").alias("widx")
+    ).agg(
+        F.bit_or(
+            F.expr(f"shiftleft(CAST(1 AS BIGINT), CAST(p % {BLOOM_W} AS INT))")
+        ).alias("w")
+    )
+    # probe: K bit tests per batch hash against the broadcast words map
+    bpos = batch.crossJoin(F.broadcast(mm)).select(
+        "h",
+        F.explode(
+            F.array(
+                *[
+                    _bloom_pos_spark(F.col("h"), k, F.col("m"))
+                    for k in range(BLOOM_K)
+                ]
+            )
+        ).alias("p"),
+    )
+    hit = F.col("w").isNotNull() & (
+        F.expr(f"shiftright(w, CAST(p % {BLOOM_W} AS INT))").bitwiseAND(F.lit(1))
+        == 1
+    )
+    probe = (
+        bpos.join(
+            F.broadcast(words),
+            (F.col("p") / BLOOM_W).cast("long") == F.col("widx"),
+            "left",
+        )
+        .groupBy("h")
+        .agg(F.bool_and(hit).alias("might"))
+    )
+    gated = batch.join(probe, "h")
+    # fast path: Bloom miss == PROOF of novelty, no corpus join
+    fast = gated.filter(~F.col("might")).withColumn("path", F.lit("fast"))
+    # suspected dups: exact anti-join clears the false positives
+    verified = (
+        gated.filter(F.col("might"))
+        .join(existing, "h", "left_anti")
+        .withColumn("path", F.lit("verified"))
+    )
+    return fast.unionByName(verified).select(
+        "doc_id", "h", "n_copies", "path"
+    )
+
+
+# ---------------------------------------------------------------------------
+# dedup_fuzzy_ingest — cross-corpus NEAR-dup admission (the fuzzy half
+# of crawl ingest; dedup_probabilistic above is the exact half).
+
+FUZZY_TAU = 0.8  # dedup_minhash's verification threshold
+FUZZY_CAP = 8  # existing-side candidate cap per batch doc
+
+
+def _fuzzy_oracle() -> str:
+
+    return f"""
+WITH {lsh_buckets_sql()},
+exb AS MATERIALIZED (
+  SELECT band, bucket, doc_id AS e_id FROM buckets WHERE doc_id % 5 = 0
+),
+btb AS MATERIALIZED (
+  SELECT band, bucket, doc_id AS b_id FROM buckets WHERE doc_id % 5 <> 0
+),
+grouped AS MATERIALIZED (
+  SELECT band, bucket, list_sort(list(DISTINCT e_id)) AS eids
+  FROM exb GROUP BY band, bucket
+),
+cand AS MATERIALIZED (
+  SELECT b.b_id, unnest(g.eids[1:{FUZZY_CAP}]) AS e_id
+  FROM btb b JOIN grouped g USING (band, bucket)
+),
+capped AS MATERIALIZED (
+  SELECT b_id, unnest(list_sort(list(DISTINCT e_id))[1:{FUZZY_CAP}]) AS e_id
+  FROM cand GROUP BY b_id
+),
+dropped AS MATERIALIZED (
+  SELECT DISTINCT c.b_id
+  FROM capped c
+  JOIN th_t ta ON ta.doc_id = c.e_id
+  JOIN th_t tb ON tb.doc_id = c.b_id
+  WHERE {jaccard_sql()} >= {FUZZY_TAU!r}
+)
+SELECT d.doc_id, (dr.b_id IS NULL) AS keep
+FROM d LEFT JOIN dropped dr ON dr.b_id = d.doc_id
+WHERE d.doc_id % 5 <> 0
+"""
+
+
+def fuzzy_group_state(exb):
+    """Group standing-side (band,bucket,e_id) rows into the sorted
+    per-bucket id arrays the admission rule consumes. Kept as its own
+    factor so a PRE-GROUPED, cap-compacted state store (dedup_stream_lsh's
+    streaming ingest) can skip this full-state shuffle per batch."""
+    return exb.groupBy("band", "bucket").agg(
+        F.sort_array(F.collect_set("e_id")).alias("eids")
+    )
+
+
+def fuzzy_capped(btb, grouped, cap=FUZZY_CAP):
+    """Capped candidate generation: join arriving (band,bucket,b_id)
+    against grouped standing buckets, take the cap smallest standing
+    ids per bucket, then the cap smallest of each arriving doc's
+    per-band union — per-reducer state bounded at cap x bands ids, no
+    arriving-arriving or standing-standing pair ever formed."""
+    cand = btb.join(grouped, ["band", "bucket"]).select(
+        "b_id", F.explode(F.slice("eids", 1, cap)).alias("e_id")
+    )
+    return (
+        cand.groupBy("b_id")
+        .agg(
+            F.slice(F.array_sort(F.collect_set("e_id")), 1, cap).alias("eids")
+        )
+        .select("b_id", F.explode("eids").alias("e_id"))
+    )
+
+
+def fuzzy_verified_drops(capped, b_toks, e_toks, tau=FUZZY_TAU):
+    """Exact-Jaccard verification of capped candidate pairs; returns
+    the DISTINCT dropped b_ids (a verified >= tau partner exists)."""
+    verified = capped.join(
+        e_toks.select(F.col("e_id"), F.col("toks").alias("e_toks")), "e_id"
+    ).join(
+        b_toks.select(F.col("b_id"), F.col("toks").alias("b_toks")), "b_id"
+    )
+    jacc = F.size(F.array_intersect("e_toks", "b_toks")).cast(
+        "double"
+    ) / F.size(F.array_union("e_toks", "b_toks"))
+    return (
+        verified.withColumn("jaccard", rnd(jacc))
+        .filter(F.col("jaccard") >= tau)
+        .select("b_id")
+        .distinct()
+    )
+
+
+def fuzzy_dropped(btb, exb, b_toks, e_toks, cap=FUZZY_CAP, tau=FUZZY_TAU):
+    """THE cross-corpus capped LSH admission rule, factored so
+    the batch ingest below and the streaming ingest
+    (dedup_stream_lsh's per-micro-batch twin) are one code path.
+    ``btb``/(band,bucket,b_id) is the arriving side, ``exb``/(band,
+    bucket,e_id) the standing side; ``b_toks``/(b_id,toks) and
+    ``e_toks``/(e_id,toks) feed exact-Jaccard verification. Composed
+    from the three factors above (split so the streaming twin can
+    feed a pre-grouped pruned state instead of re-grouping the full
+    standing corpus every micro-batch)."""
+    return fuzzy_verified_drops(
+        fuzzy_capped(btb, fuzzy_group_state(exb), cap), b_toks, e_toks, tau
+    )
+
+
+@register("dedup_fuzzy_ingest", oracle=_fuzzy_oracle())
+def dedup_fuzzy_ingest(spark, sf_dir):
+    """Cross-corpus near-duplicate admission: a new crawl batch
+    (doc_id % 5 != 0) is deduped against the EXISTING corpus
+    (doc_id % 5 == 0) by MinHash-LSH — the GPT-3/CCNet ingest shape
+    where each crawl is fuzzy-deduplicated against all previous crawls,
+    not just against itself (dedup_minhash) and not just exactly
+    (dedup_probabilistic/dedup_incremental). A batch doc is dropped
+    when a capped LSH candidate from the EXISTING side verifies at
+    exact Jaccard >= 0.8; output is one keep/drop decision per batch
+    doc.
+
+    Reuses dedup_minhash's signatures and band buckets verbatim
+    (llm_dedup.lsh_signatures / lsh_buckets_sql) — only the candidate
+    join is asymmetric: existing-side ids group per (band, bucket) into
+    a sorted list, each batch doc takes the cap smallest, and one
+    groupBy per batch doc dedups the per-band unions. Per-reducer state
+    is bounded at cap x bands ids exactly as in the self-join case.
+
+    100 TB: the existing corpus contributes signatures only (32 longs
+    per doc — in production these are PERSISTED once per crawl, not
+    recomputed); candidates are an equi-join on (band, bucket); the cap
+    bounds verification at cap x |batch| pairs however hot the buckets
+    get. No batch-batch or existing-existing pair is ever formed."""
+
+    sig, buckets = lsh_signatures(spark, sf_dir)
+    is_existing = F.col("doc_id") % 5 == 0
+    exb = buckets.filter(is_existing).select(
+        "band", "bucket", F.col("doc_id").alias("e_id")
+    )
+    btb = buckets.filter(~is_existing).select(
+        "band", "bucket", F.col("doc_id").alias("b_id")
+    )
+    toks = sig.select("doc_id", "toks")
+    dropped = fuzzy_dropped(
+        btb,
+        exb,
+        toks.select(F.col("doc_id").alias("b_id"), "toks"),
+        toks.select(F.col("doc_id").alias("e_id"), "toks"),
+    )
+    batch = sig.filter(~is_existing).select("doc_id")
+    return batch.join(
+        dropped.withColumnRenamed("b_id", "doc_id"), "doc_id", "left_anti"
+    ).withColumn("keep", F.lit(True)).unionByName(
+        dropped.select(F.col("b_id").alias("doc_id")).withColumn(
+            "keep", F.lit(False)
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# dedup_stream_lsh — streaming near-dup ingest: the
+# watermarked streaming surface composed with the LSH fuzzy-admission
+# stages, so a live crawl deduplicates each arriving micro-batch against
+# STANDING state and folds its admissions back in.
+
+_STREAM_ROUNDS = 3
+_DOCS_SCHEMA = (
+    "doc_id bigint, text string, lang string, source string, n_chars bigint"
+)
+# Standing-state layout: bucket state is stored
+# PRE-GROUPED and CAP-COMPACTED (per (band,bucket) the sorted <=cap
+# smallest admitted ids — the only ids the admission slice can ever
+# use), hive-partitioned by (band, bs=pmod(bucket, _BUCKET_SHARDS)) so
+# a micro-batch reads only the partition directories its own buckets
+# can touch. Token state is partitioned by ds=pmod(doc_id, _TOK_SHARDS)
+# so Jaccard verification reads only the shards holding candidate ids.
+_BUCKET_SHARDS = 4
+_TOK_SHARDS = 8
+_COMPACT_EVERY = 8  # legacy fixed cadence (kept for the cadence test)
+_COMPACT_FILES = 8  # fragmentation threshold: compact a (band, bs)
+# leaf once it holds this many files (>= bounds read amplification at
+# cap-merge time; appends write one file per touched leaf per batch)
+
+
+def _leaf_file_count(st_b: str, band, bs) -> int:
+    import os as _os
+
+    leaf = _os.path.join(st_b, f"band={band}", f"bs={bs}")
+    try:
+        return sum(1 for f in _os.listdir(leaf) if f.endswith(".parquet"))
+    except OSError:
+        return 0
+
+
+_GSTATE_SCHEMA = "bucket bigint, eids array<bigint>, band int, bs int"
+_TOKS_PART_SCHEMA = "doc_id bigint, toks array<string>, ds int"
+
+
+def _bucket_shard(col):
+    return F.pmod(col, F.lit(_BUCKET_SHARDS)).cast("int")
+
+
+def _tok_shard(col):
+    return F.pmod(col, F.lit(_TOK_SHARDS)).cast("int")
+
+
+def _read_pruned_buckets(spark, st_b, pairs, cap):
+    """Partition-pruned standing-state read: only the (band, bs) hive
+    directories in ``pairs`` are listed and scanned — the filter is a
+    disjunction over partition columns only, so it resolves at file
+    listing time (PartitionFilters in the scan node), never touching
+    the other shards' bytes. ``pairs`` is bounded at
+    N_BANDS x _BUCKET_SHARDS regardless of corpus size.
+
+    State rows are APPEND-ONLY pre-capped groups (one row per bucket
+    per admitting batch); this read cap-merges them back to one sorted
+    <=cap array per bucket. Exact despite per-row capping: an id
+    outside a row's cap-smallest could only have been capped out by
+    cap smaller ids in that same row, all of which are present in the
+    merge, so it can never re-enter any cap slice."""
+    from functools import reduce
+
+    cond = reduce(
+        lambda acc, p: acc
+        | ((F.col("band") == p[0]) & (F.col("bs") == p[1])),
+        sorted(pairs),
+        F.lit(False),
+    )
+    return (
+        spark.read.schema(_GSTATE_SCHEMA)
+        .parquet(st_b)
+        .filter(cond)
+        .groupBy("band", "bucket")
+        .agg(
+            F.slice(
+                F.array_sort(F.array_distinct(F.flatten(F.collect_list("eids")))),
+                1,
+                cap,
+            ).alias("eids")
+        )
+        .select("band", "bucket", "eids")
+    )
+
+
+def _compact_buckets(spark, st_b, pairs, cap):
+    """Physical cap-compaction: rewrite the given (band, bs) partitions
+    as one merged <=cap row per bucket (dynamic partition overwrite of
+    a checkpointed merge), so standing state stays bounded at
+    cap x n_buckets ids no matter how many batches appended. Triggered
+    per leaf by measured fragmentation (>= _COMPACT_FILES files) —
+    amortized, never on the admission path."""
+    merged = (
+        _read_pruned_buckets(spark, st_b, pairs, cap)
+        .withColumn("bs", _bucket_shard(F.col("bucket")))
+        .localCheckpoint(eager=True)  # pin before overwriting source
+    )
+    (
+        merged.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("band", "bs")
+        .parquet(st_b)
+    )
+
+
+def _stream_lsh_oracle() -> str:
+    """Sequential-ingest replay: the standing corpus (doc_id % 5 == 0)
+    is round-0 state; crawl round k (doc_id % 3 == k among the rest)
+    dedups against everything admitted so far, then its keeps join the
+    admitted set — three unrolled MATERIALIZED rounds of the exact
+    dedup_fuzzy_ingest CTE chain."""
+
+    parts = [
+        lsh_buckets_sql(),
+        "adm0 AS MATERIALIZED (SELECT doc_id FROM d WHERE doc_id % 5 = 0)",
+    ]
+    drops = []
+    for k in range(_STREAM_ROUNDS):
+        parts.append(
+            f"bk{k} AS MATERIALIZED (SELECT doc_id FROM d "
+            f"WHERE doc_id % 5 <> 0 AND doc_id % 3 = {k})"
+        )
+        parts.append(
+            f"""g{k} AS MATERIALIZED (
+  SELECT band, bucket, list_sort(list(DISTINCT b.doc_id)) AS eids
+  FROM buckets b JOIN adm{k} a USING (doc_id) GROUP BY band, bucket)"""
+        )
+        parts.append(
+            f"""c{k} AS MATERIALIZED (
+  SELECT bb.doc_id AS b_id, unnest(g.eids[1:{FUZZY_CAP}]) AS e_id
+  FROM buckets bb JOIN bk{k} USING (doc_id) JOIN g{k} g USING (band, bucket))"""
+        )
+        parts.append(
+            f"""p{k} AS MATERIALIZED (
+  SELECT b_id, unnest(list_sort(list(DISTINCT e_id))[1:{FUZZY_CAP}]) AS e_id
+  FROM c{k} GROUP BY b_id)"""
+        )
+        parts.append(
+            f"""dr{k} AS MATERIALIZED (
+  SELECT DISTINCT p.b_id
+  FROM p{k} p
+  JOIN th_t ta ON ta.doc_id = p.e_id
+  JOIN th_t tb ON tb.doc_id = p.b_id
+  WHERE {jaccard_sql()} >= {FUZZY_TAU!r})"""
+        )
+        drops.append(f"SELECT b_id FROM dr{k}")
+        if k < _STREAM_ROUNDS - 1:
+            parts.append(
+                f"""adm{k + 1} AS MATERIALIZED (
+  SELECT doc_id FROM adm{k}
+  UNION ALL
+  SELECT b.doc_id FROM bk{k} b
+  LEFT JOIN dr{k} x{k} ON x{k}.b_id = b.doc_id
+  WHERE x{k}.b_id IS NULL)"""
+            )
+    union_drops = "\n      UNION ALL ".join(drops)
+    return (
+        "WITH "
+        + ",\n".join(parts)
+        + f"""
+SELECT b.doc_id, CAST(b.doc_id % 3 AS INT) AS round,
+       (dr.b_id IS NULL) AS keep
+FROM (SELECT doc_id FROM d WHERE doc_id % 5 <> 0) b
+LEFT JOIN ({union_drops}) dr ON dr.b_id = b.doc_id
+"""
+    )
+
+
+@register("dedup_stream_lsh", oracle=_stream_lsh_oracle())
+def dedup_stream_lsh(spark, sf_dir):
+    """STREAMING near-duplicate ingest — the live-crawl
+    shape: document batches arrive as a real file-source
+    stream; each micro-batch is MinHash-LSH deduplicated against the
+    STANDING admitted corpus inside foreachBatch, and its admissions
+    MERGE back into that state before the next batch — so a near-dup
+    of a doc admitted two crawls ago is dropped even though batch LSH
+    (dedup_minhash) and streaming exact dedup (sessions.stream_dedup)
+    would each miss it.
+
+    One code path with the batch twin: signatures/bands come from
+    llm_dedup.lsh_signatures_df and the capped admission rule is
+    fuzzy_dropped — literally the functions dedup_fuzzy_ingest
+    runs, applied per micro-batch. Arrival rounds are the exact
+    function doc_id % 3 (a value-partitioned staged write, moved file
+    by file into the watched directory), so the whole sequential fold
+    replays relationally: the oracle unrolls the three rounds as
+    MATERIALIZED CTE generations of the fuzzy-ingest chain.
+
+    Per-batch state discipline: the drop set is eagerly checkpointed
+    BEFORE any state write (the decision must see state as of batch
+    start); decisions land in an append-only sink. Bucket state lives
+    PRE-GROUPED and CAP-COMPACTED: per
+    (band,bucket) only the sorted cap SMALLEST admitted ids —
+    semantics-preserving because the admission slice sort(S)[1:cap]
+    depends only on those — hive-partitioned by (band, bucket shard)
+    so each micro-batch's state read PRUNES to the directories its own
+    buckets map to instead of re-scanning (and re-grouping!) the full
+    standing corpus. Admissions APPEND pre-capped per-bucket groups
+    (the pruned read cap-merges them exactly — see
+    _read_pruned_buckets); once a leaf's measured fragmentation reaches
+    _COMPACT_FILES files, a physical
+    compaction rewrites that partition to one row per bucket
+    (dynamic partition overwrite on a checkpointed merge; at 100 TB
+    the same rewrite is a staged write + atomic dir swap). Token state
+    is doc-id-sharded the same way, so Jaccard verification reads only
+    the shards that hold candidate ids. The existing side contributes
+    signatures, never text, exactly as in the batch twin."""
+    import os as _os
+
+    base = scratch_dir(spark, "stream_lsh")
+    shutil.rmtree(base, ignore_errors=True)
+    replay = _os.path.join(base, "replay")
+    ckpt = _os.path.join(base, "ckpt")
+    st_b = _os.path.join(base, "state_buckets")
+    st_t = _os.path.join(base, "state_toks")
+    dec = _os.path.join(base, "decisions")
+    staged = _os.path.join(base, "_staged")
+    _os.makedirs(replay, exist_ok=True)
+
+    # Micro-batch shuffles here move batch-sized (not corpus-sized)
+    # data through many small jobs; 32-way exchanges are pure task
+    # overhead at that volume. Scope a smaller width to this operator
+    # and restore the session dial after (results are order-free, so
+    # the width never affects the hash). Only the EXPLICIT conf is
+    # shared with the rest of the streaming family (a production
+    # stream sizes it to executor count); the default here deliberately
+    # diverges from _util.stream_shuffle_width's adaptive clamp — 8 is
+    # the measured local sweet spot for these ~batch-row jobs.
+    from terasort_spark.operators._util import STREAM_SHUFFLE_CONF
+
+    _explicit = spark.conf.get(STREAM_SHUFFLE_CONF, None)
+    _width = _explicit if _explicit and _explicit.strip() else "8"
+    _prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", _width)
+    try:
+        return _stream_lsh_run(
+            spark, sf_dir, replay, ckpt, st_b, st_t, dec, staged
+        )
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", _prev_sp)
+
+
+def _stream_lsh_run(spark, sf_dir, replay, ckpt, st_b, st_t, dec, staged):
+    import os as _os
+
+
+    docs = table(spark, sf_dir, "documents")
+    # bootstrap standing state from the existing corpus: grouped,
+    # cap-compacted, shard-partitioned (layout documented at top)
+    sig0, b0 = lsh_signatures_df(
+        docs.filter(F.col("doc_id") % 5 == 0).select("doc_id", "text")
+    )
+    (
+        b0.groupBy("band", "bucket")
+        .agg(
+            F.slice(
+                F.sort_array(F.collect_set("doc_id")), 1, FUZZY_CAP
+            ).alias("eids")
+        )
+        .withColumn("bs", _bucket_shard(F.col("bucket")))
+        # repartition on the partition columns: one file per leaf dir
+        # instead of one per task per dir (commit cost is per file)
+        .repartition("band", "bs")
+        .write.mode("overwrite")
+        .partitionBy("band", "bs")
+        .parquet(st_b)
+    )
+    (
+        sig0.select("doc_id", "toks")
+        .withColumn("ds", _tok_shard(F.col("doc_id")))
+        .repartition("ds")
+        .write.mode("overwrite")
+        .partitionBy("ds")
+        .parquet(st_t)
+    )
+
+    # stage the crawl rounds: VALUE-partitioned write (round is the
+    # exact function doc_id % 3, never a sampled range), then each
+    # round's files move into the watched dir when its turn comes
+    (
+        docs.filter(F.col("doc_id") % 5 != 0)
+        .withColumn("_round", F.pmod("doc_id", F.lit(3)).cast("int"))
+        .repartition(_STREAM_ROUNDS, "_round")
+        .write.mode("overwrite")
+        .partitionBy("_round")
+        .parquet(staged)
+    )
+
+    def admit(batch_df, _batch_id):
+        b = batch_df.select("doc_id", "text")
+        sigb, bb = lsh_signatures_df(b)
+        btb = bb.select("band", "bucket", F.col("doc_id").alias("b_id"))
+        # (band, shard) pairs this batch can touch — bounded at
+        # N_BANDS x _BUCKET_SHARDS rows regardless of batch size, so
+        # the collect is a constant-size driver list, not data volume
+        touched = {
+            (r["band"], r["bs"])
+            for r in btb.filter(F.col("bucket").isNotNull())
+            .select("band", _bucket_shard(F.col("bucket")).alias("bs"))
+            .distinct()
+            .collect()
+        }  # NULL-text docs have NULL buckets: they can never match
+        # standing state, so they prune out here and fall through to
+        # keep=True via the left-anti decision join
+        state = _read_pruned_buckets(spark, st_b, touched, FUZZY_CAP)
+        capped = fuzzy_capped(btb, state)
+        # token-state pruning without a second action: semi-join the
+        # doc-sharded toks store against the candidates' shard set
+        # (broadcast -> dynamic partition pruning prunes the ds= dirs
+        # at scale; locally it degrades to a cheap semi-join, same
+        # rows either way)
+        cand_ds = capped.select(_tok_shard(F.col("e_id")).alias("ds")).distinct()
+        e_toks = (
+            spark.read.schema(_TOKS_PART_SCHEMA)
+            .parquet(st_t)
+            .join(F.broadcast(cand_ds), "ds", "left_semi")
+            .select(F.col("doc_id").alias("e_id"), "toks")
+        )
+        b_toks = sigb.select(F.col("doc_id").alias("b_id"), "toks")
+        # pin the drop set against state AS OF batch start: the toks
+        # append below would otherwise change what a lazy recompute of
+        # this plan reads (the buckets append changes st_b too)
+        dropped = fuzzy_verified_drops(
+            capped, b_toks, e_toks
+        ).localCheckpoint(eager=True)
+        drop_ids = dropped.withColumnRenamed("b_id", "doc_id")
+        decisions = (
+            sigb.select("doc_id")
+            .join(drop_ids, "doc_id", "left_anti")
+            .withColumn("keep", F.lit(True))
+            .unionByName(drop_ids.withColumn("keep", F.lit(False)))
+        )
+        kept = sigb.select("doc_id", "toks").join(
+            drop_ids, "doc_id", "left_anti"
+        )
+        # the batch's admissions append as pre-capped per-bucket groups
+        # (one row per bucket per batch; the pruned read cap-merges);
+        # every new row's partition is in `touched` by construction —
+        # its bucket came from btb
+        new_groups = (
+            bb.join(kept.select("doc_id"), "doc_id")
+            .groupBy("band", "bucket")
+            .agg(
+                F.slice(
+                    F.sort_array(F.collect_set("doc_id")), 1, FUZZY_CAP
+                ).alias("eids")
+            )
+            .withColumn("bs", _bucket_shard(F.col("bucket")))
+            .repartition("band", "bs")  # one file per touched leaf dir
+        )
+        new_toks = kept.withColumn(
+            "ds", _tok_shard(F.col("doc_id"))
+        ).repartition("ds")
+        # all three sinks read only the PINNED drop set (plus the lazy
+        # signature checkpoint), so they are independent — submit them
+        # concurrently; small-job latency, not data volume, is the
+        # per-batch cost here
+        from concurrent.futures import ThreadPoolExecutor
+
+        with ThreadPoolExecutor(max_workers=3) as pool:
+            futs = [
+                pool.submit(
+                    lambda: decisions.write.mode("append").parquet(dec)
+                ),
+                pool.submit(
+                    lambda: new_groups.write.mode("append")
+                    .partitionBy("band", "bs")
+                    .parquet(st_b)
+                ),
+                pool.submit(
+                    lambda: new_toks.write.mode("append")
+                    .partitionBy("ds")
+                    .parquet(st_t)
+                ),
+            ]
+            for f in futs:
+                f.result()
+        # amortized physical compaction keeps per-bucket state at ONE
+        # row regardless of batch count. Cadence is AUTO-TUNED by
+        # measured fragmentation: a leaf
+        # (band, bs) dir is rewritten only once it holds >=
+        # _COMPACT_FILES parquet files — compaction work tracks actual
+        # append pressure per leaf instead of a blind every-N clock, so
+        # hot leaves stay within a bounded read amplification while
+        # cold leaves are never rewritten. The listing is the same
+        # O(touched-leaves) driver metadata walk the pruned read
+        # already pays; at 100 TB the file count comes from the table
+        # metadata layer (manifest/file-index) for the same O(1)/leaf.
+        frag = [
+            (band, bs)
+            for band, bs in touched
+            if _leaf_file_count(st_b, band, bs) >= _COMPACT_FILES
+        ]
+        if frag:
+            _compact_buckets(spark, st_b, frag, FUZZY_CAP)
+
+    q = (
+        spark.readStream.schema(_DOCS_SCHEMA)
+        .parquet(replay)
+        .writeStream.foreachBatch(admit)
+        .option("checkpointLocation", ckpt)
+        .trigger(processingTime="0 seconds")
+        .start()
+    )
+    try:
+        for r in range(_STREAM_ROUNDS):
+            rdir = _os.path.join(staged, f"_round={r}")
+            if _os.path.isdir(rdir):
+                parts = sorted(
+                    f for f in _os.listdir(rdir) if f.endswith(".parquet")
+                )
+                for j, f in enumerate(parts):
+                    _os.rename(
+                        _os.path.join(rdir, f),
+                        _os.path.join(replay, f"data-{r}-{j}.parquet"),
+                    )
+            q.processAllAvailable()
+    finally:
+        q.stop()
+
+    if not _os.path.isdir(dec):  # empty corpus: no batch ever landed
+        return spark.createDataFrame(
+            [], "doc_id bigint, round int, keep boolean"
+        )
+    return (
+        spark.read.schema("doc_id bigint, keep boolean")
+        .parquet(dec)
+        .select(
+            "doc_id",
+            F.pmod("doc_id", F.lit(3)).cast("int").alias("round"),
+            "keep",
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# dedup_semantic
+
+_SEM_K = 8  # centroid vectors: vec_id < 8
+_SEM_TAU = 0.4
+
+
+def _semdedup_oracle() -> str:
+    from terasort_spark.operators.llm_similarity import _dot_sql, _norm_sql
+
+    def cos(a, b):
+        return f"{_dot_sql(a, b)} / ({_norm_sql(a)} * {_norm_sql(b)})"
+
+    ccos = o_rnd(cos("v.embedding", "c.embedding"))
+    pcos = o_rnd(cos("ea.embedding", "eb.embedding"))
+    return f"""
+WITH cents AS (SELECT vec_id AS cent_id, embedding FROM embeddings
+               WHERE vec_id < {_SEM_K}),
+asg AS (
+    SELECT vec_id, cent_id AS cluster FROM (
+        SELECT v.vec_id, c.cent_id,
+               row_number() OVER (
+                   PARTITION BY v.vec_id
+                   ORDER BY {ccos} DESC, c.cent_id) AS rn
+        FROM embeddings v CROSS JOIN cents c) WHERE rn = 1
+)
+SELECT a.vec_id, CAST(a.cluster AS BIGINT) AS cluster,
+       EXISTS (
+           SELECT 1 FROM asg b
+           JOIN embeddings eb ON eb.vec_id = b.vec_id
+           JOIN embeddings ea ON ea.vec_id = a.vec_id
+           WHERE b.cluster = a.cluster AND b.vec_id < a.vec_id
+             AND {pcos} >= {_SEM_TAU!r}
+       ) AS is_dup
+FROM asg a
+"""
+
+
+# ``dedup_semantic`` — SemDeDup-style clustered embedding dedup
+# (Abbas et al. 2023): route vectors to their argmax-cosine centroid,
+# then near-dup only WITHIN a cluster — the candidate-bounding trick
+# that turns O(n²) cosine dedup into sum-of-cluster-sizes², the
+# embedding twin of LSH bucketing (dedup_embcos is the unclustered
+# exact slice).
+@register("dedup_semantic", oracle=_semdedup_oracle())
+def dedup_semantic(spark, sf_dir):
+    """SemDeDup-style clustered semantic dedup (Abbas et al. 2023):
+    (1) route every embedding to its argmax-cosine centroid (here the
+    first K=8 vectors as fixed deterministic centroids; production
+    seeds them with emb_kmeans), (2) compare pairs only WITHIN a
+    cluster, (3) mark a vector duplicate when an earlier (smaller
+    vec_id) cluster-mate has cosine >= 0.4 — keep-earliest, the
+    deterministic greedy.
+
+    The cluster routing is the whole point at scale: candidate cost
+    drops from n²/2 to Σ|cluster|²/2, and each cluster's pair join is
+    an equi-join on the cluster key — the embedding-space twin of
+    MinHash-LSH banding (dedup_embcos is the unclustered exact slice;
+    sim_cosine_ivf uses the same routing idea for search). Assignment
+    broadcasts K vectors; ties break to the smaller centroid id.
+    Cosines round to 4dp via the shared dot_fold (bit-identical to
+    the oracle's list_sum twin), so the EXISTS set replays exactly."""
+    from terasort_spark.operators.llm_similarity import dot_fold
+
+    e = table(spark, sf_dir, "embeddings").select(
+        "vec_id",
+        F.transform("embedding", lambda x: x.cast("double")).alias("emb"),
+    )
+    cents = F.broadcast(
+        e.where(F.col("vec_id") < _SEM_K).select(
+            F.col("vec_id").alias("cent_id"), F.col("emb").alias("cemb")
+        )
+    )
+
+    # Precompute each vector's norm ONCE (sqrt of the same fold the
+    # oracle's per-pair recomputation runs — identical doubles, 1/3 the
+    # fold work in the pair join: dot only, not dot + two norms).
+    e = e.withColumn("nrm", F.sqrt(dot_fold(F.col("emb"), F.col("emb"))))
+    cents = F.broadcast(
+        cents.withColumn(
+            "cnrm", F.sqrt(dot_fold(F.col("cemb"), F.col("cemb")))
+        )
+    )
+
+    w = Window.partitionBy("vec_id").orderBy(
+        F.desc("ccos"), F.asc("cent_id")
+    )
+    ccos = dot_fold(F.col("emb"), F.col("cemb")) / (
+        F.col("nrm") * F.col("cnrm")
+    )
+    asg = (
+        e.crossJoin(cents)
+        .withColumn("ccos", rnd(ccos))
+        .withColumn("rn", F.row_number().over(w))
+        .where(F.col("rn") == 1)
+        .select("vec_id", F.col("cent_id").alias("cluster"), "emb", "nrm")
+        # materialize the assignment once: three downstream consumers
+        # (both pair sides + the label read-off) would otherwise each
+        # re-derive the centroid cross; at corpus scale the assignment
+        # is a persisted table (the sink_ann_index pattern)
+        .localCheckpoint(eager=True)
+    )
+    a = asg.select(
+        F.col("vec_id").alias("a_id"),
+        "cluster",
+        F.col("emb").alias("a_emb"),
+        F.col("nrm").alias("a_nrm"),
+    )
+    b = asg.select(
+        F.col("vec_id").alias("b_id"),
+        F.col("cluster").alias("b_cluster"),
+        F.col("emb").alias("b_emb"),
+        F.col("nrm").alias("b_nrm"),
+    )
+    pcos = dot_fold(F.col("a_emb"), F.col("b_emb")) / (
+        F.col("a_nrm") * F.col("b_nrm")
+    )
+    dups = (
+        a.join(
+            b,
+            (F.col("cluster") == F.col("b_cluster"))
+            & (F.col("b_id") < F.col("a_id")),
+        )
+        .withColumn("pcos", rnd(pcos))
+        .where(F.col("pcos") >= _SEM_TAU)
+        .select(F.col("a_id").alias("vec_id"))
+        .distinct()
+        .withColumn("dup", F.lit(True))
+    )
+    return (
+        asg.join(dups, "vec_id", "left")
+        .select(
+            "vec_id",
+            F.col("cluster").cast("bigint").alias("cluster"),
+            F.coalesce("dup", F.lit(False)).alias("is_dup"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# ``dedup_cluster_keepbest`` — duplicate clustering + QUALITY-AWARE
+# keeper: keep the longest (then smallest-id) document per
+# near-duplicate cluster, not the smallest-id one — what a curation
+# pipeline actually ships (dedup_minhash/dedup_cluster keep by id).
+
+
+@register(
+    "dedup_cluster_keepbest",
+    oracle="""
+WITH RECURSIVE
+t AS (SELECT doc_id, n_chars,
+             list_distinct(string_split(lower(text),' ')) AS toks
+      FROM documents WHERE doc_id < 200),
+p AS (SELECT a.doc_id AS u, b.doc_id AS v FROM t a JOIN t b
+      ON a.doc_id < b.doc_id
+      WHERE CAST(len(list_intersect(a.toks,b.toks)) AS DOUBLE)
+            / len(list_distinct(a.toks || b.toks)) >= 0.9),
+e AS (SELECT u, v FROM p UNION SELECT v, u FROM p),
+reach AS (
+  SELECT u, v FROM e
+  UNION
+  SELECT r.u, e.v FROM reach r JOIN e ON r.v = e.u
+),
+lab AS (
+  SELECT d.doc_id, d.n_chars,
+         least(d.doc_id, coalesce(min(r.v), d.doc_id)) AS cluster_id
+  FROM t d LEFT JOIN reach r ON r.u = d.doc_id
+  GROUP BY d.doc_id, d.n_chars
+)
+SELECT doc_id, cluster_id, (rn = 1) AS keep FROM (
+  SELECT doc_id, cluster_id,
+         row_number() OVER (PARTITION BY cluster_id
+              ORDER BY n_chars DESC, doc_id) AS rn
+  FROM lab)
+""",
+)
+def dedup_cluster_keepbest(spark, sf_dir):
+    """Near-duplicate clustering with a QUALITY-AWARE keeper: cluster
+    by connected components over exact-Jaccard >= 0.9 pairs
+    (dedup_cluster's generator, replayable), then keep the LONGEST
+    document per cluster (n_chars DESC, doc_id tiebreak) instead of
+    the smallest id. Keep-longest is the curation default — near-dup
+    clusters usually contain one full document and several truncated
+    or boilerplate-stripped copies, and keep-by-id throws away the
+    full one whenever a fragment crawled first.
+
+    Plan: reuses dedup_cluster's converged label propagation (min-label
+    rounds over the pair graph), then one per-cluster window for the
+    keeper — the only addition to the id-keeper pipeline is that
+    window, whose partition is duplicate-cluster-sized (bounded), not
+    corpus-sized."""
+
+    labels = dedup_cluster(spark, sf_dir)  # (doc_id, cluster_id), converged
+    d = (
+        table(spark, sf_dir, "documents")
+        .where(F.col("doc_id") < 200)
+        .select("doc_id", "n_chars")
+    )
+    w = Window.partitionBy("cluster_id").orderBy(
+        F.desc("n_chars"), F.asc("doc_id")
+    )
+    return (
+        labels.join(d, "doc_id")
+        .withColumn("rn", F.row_number().over(w))
+        .select("doc_id", "cluster_id", (F.col("rn") == 1).alias("keep"))
+    )
+
+
+# ---------------------------------------------------------------------------
+# dedup_bloom_ingest
+
+_BI_BITS = 4096  # 3 md5 nibbles = 12 bits -> exactly [0, 4096)
+_BI_K = 3
+_BI_SPLIT = 300  # standing corpus: doc_id < 300; new batch: the rest
+
+
+def _bi_pos(md5col, i: int):
+    # 3 hex nibbles at digest offset 8*i — 12 independent digest bits,
+    # the agg_heavyhitters md5-slice pattern
+    return F.conv(F.substring(md5col, i * 8 + 1, 3), 16, 10).cast("bigint")
+
+
+def _bi_pos_sql(h: str, i: int) -> str:
+    start = i * 8 + 1
+    nibs = " + ".join(
+        f"(strpos('0123456789abcdef', substr({h},{start + j},1))-1)"
+        f"*{16 ** (2 - j)}"
+        for j in range(3)
+    )
+    return f"({nibs})"
+
+
+def _bloom_ingest_oracle() -> str:
+    build = ", ".join(_bi_pos_sql("h", i) for i in range(_BI_K))
+    probe = ", ".join(_bi_pos_sql("h", i) for i in range(_BI_K))
+    return f"""
+WITH standing AS (
+    SELECT md5(lower(text)) AS h FROM documents WHERE doc_id < {_BI_SPLIT}
+),
+words AS (
+    SELECT (p // 32) AS word, bit_or(CAST(1 AS BIGINT) << (p % 32)) AS bits
+    FROM (SELECT unnest([{build}]) AS p FROM standing) GROUP BY 1
+),
+batch AS (
+    SELECT doc_id, md5(lower(text)) AS h FROM documents
+    WHERE doc_id >= {_BI_SPLIT}
+),
+probe AS (SELECT doc_id, unnest([{probe}]) AS p FROM batch),
+hits AS (
+    SELECT pr.doc_id,
+           count(*) FILTER (
+               WHERE (w.bits & (CAST(1 AS BIGINT) << (pr.p % 32))) <> 0
+           ) AS nbits
+    FROM probe pr LEFT JOIN words w ON w.word = pr.p // 32
+    GROUP BY pr.doc_id
+)
+SELECT b.doc_id, (h.nbits < {_BI_K}) AS admitted
+FROM batch b JOIN hits h ON h.doc_id = b.doc_id
+"""
+
+
+# ``dedup_bloom_ingest`` — crawl-ingest gate: a Bloom filter built
+# over the standing corpus's content digests admits only unseen
+# documents from the new batch; false positives (deterministic here,
+# md5-slice hashes) are dropped-though-new — the documented cost of a
+# no-state-lookup gate, and exactly the accounting the oracle
+# replays.
+@register("dedup_bloom_ingest", oracle=_bloom_ingest_oracle())
+def dedup_bloom_ingest(spark, sf_dir):
+    """Crawl-ingest Bloom gate: the standing corpus (doc_id < 300)
+    publishes a 4096-bit Bloom filter over md5(lower(text)) content
+    digests (k=3 md5-nibble-slice hashes — the agg_heavyhitters
+    portable pattern, so every bit replays in SQL); the new batch
+    admits only documents whose digests the filter has NOT seen.
+
+    This is the no-state-lookup admission gate a crawl frontier runs
+    before the expensive dedup tiers (dedup_incremental joins the
+    standing corpus; this gate costs a broadcast-sized bitmap and
+    three hashes per candidate — no shuffle against corpus state at
+    all). The price, stated not hidden: false positives are dropped-
+    though-new, at a rate set by the load factor; here the FP set is
+    a deterministic function of the hashes and the oracle reproduces
+    it bit-for-bit, so the gate's exact admission decisions — drops
+    included — are what the grade proves. At 100 TB the filter
+    shards by digest prefix into a bitmap per shard, still
+    broadcastable per executor."""
+    d = table(spark, sf_dir, "documents").select(
+        "doc_id", F.md5(F.lower("text")).alias("h")
+    )
+    standing = d.where(F.col("doc_id") < _BI_SPLIT)
+    build = standing.select(
+        F.explode(
+            F.array(*[_bi_pos(F.col("h"), i) for i in range(_BI_K)])
+        ).alias("p")
+    )
+    words = (
+        build.select(
+            F.shiftright("p", 5).alias("word"),
+            F.expr("shiftleft(cast(1 as bigint), cast(p % 32 as int))").alias(
+                "mask"
+            ),
+        )
+        .groupBy("word")
+        .agg(F.bit_or("mask").alias("bits"))
+    )
+    batch = d.where(F.col("doc_id") >= _BI_SPLIT)
+    probe = batch.select(
+        "doc_id",
+        F.explode(
+            F.array(*[_bi_pos(F.col("h"), i) for i in range(_BI_K)])
+        ).alias("p"),
+    )
+    hits = (
+        probe.withColumn("word", F.shiftright("p", 5))
+        .join(F.broadcast(words), "word", "left")
+        .withColumn(
+            "bit_set",
+            (
+                F.col("bits").bitwiseAND(
+                    F.expr("shiftleft(cast(1 as bigint), cast(p % 32 as int))")
+                )
+                != 0
+            ).cast("int"),
+        )
+        .groupBy("doc_id")
+        .agg(F.sum("bit_set").alias("nbits"))
+    )
+    return batch.join(hits, "doc_id").select(
+        "doc_id", (F.col("nbits") < _BI_K).alias("admitted")
     )

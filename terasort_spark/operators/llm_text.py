@@ -9,11 +9,14 @@ with only scan + one shuffle per aggregation.
 
 from __future__ import annotations
 
+from collections import Counter
+
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from terasort_spark.catalog import table
 from terasort_spark.operators._util import o_rnd, ravg, rnd
+from terasort_spark.operators.tokenizer import _word_counts, VOCAB_CAP
 from terasort_spark.registry import register
 
 # tiny per-language stopword lists for the language-ID heuristic
@@ -769,4 +772,483 @@ def text_langid_confusion(spark, sf_dir):
             F.count(F.lit(1)).cast("bigint").alias("n"),
             rnd(F.count(F.lit(1)).cast("double") / F.max("n_true"), "row_frac"),
         )
+    )
+
+
+# --------------------------------------------------------------------------
+# text_markup_extract — HTML -> visible text (the WET-extraction step).
+
+# Deterministic markup wrapper: the corpus has no raw HTML, so the query
+# MANUFACTURES a realistic page around each document (head with script,
+# heading, paragraph, per-doc links) — the _with_dups convention from
+# llm_dedup. Extraction must get exactly the visible text back out.
+_SCRIPT = "<script>var x = 1;</script>"
+
+
+@register(
+    "text_markup_extract",
+    oracle=f"""
+WITH page AS (
+    SELECT doc_id,
+           '<html><head>{_SCRIPT}</head><body><h1>' || lang ||
+           '</h1><p>' || text || '</p><a href="u' || doc_id ||
+           '">more</a>' ||
+           CASE WHEN doc_id % 3 = 0 THEN '<a href="v">x</a>' ELSE '' END ||
+           '</body></html>' AS html
+    FROM documents WHERE text IS NOT NULL
+),
+stripped AS (
+    SELECT doc_id, html,
+           trim(regexp_replace(regexp_replace(regexp_replace(html,
+               '<script>.*?</script>', ' ', 'g'),
+               '<[^>]*>', ' ', 'g'),
+               ' +', ' ', 'g')) AS clean_text
+    FROM page
+)
+SELECT doc_id, clean_text,
+       CAST(length(clean_text) AS BIGINT) AS n_chars_clean,
+       CAST(len(regexp_extract_all(html, '<a href=')) AS INTEGER) AS n_links
+FROM stripped
+""",
+)
+def text_markup_extract(spark, sf_dir):
+    """Markup-to-text extraction — the first step of every web-corpus
+    pipeline (WET extraction): drop non-content blocks (<script> here;
+    style/nav in production), strip tags, collapse whitespace, and keep
+    link counts as a quality signal (link-farm pages have high
+    links-per-char). The page is manufactured deterministically around
+    each document so the oracle can verify the extraction recovers the
+    visible text EXACTLY (heading + body), not approximately.
+
+    Scale: three regexp_replace passes and one regexp count, all
+    whole-stage codegen over the scan — no shuffle at all; the output
+    is one row per page. Java and RE2 both support the non-greedy
+    block pattern; production would swap the regex chain for a real
+    HTML parser behind the same projection."""
+    d = table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
+    html = F.concat(
+        F.lit(f"<html><head>{_SCRIPT}</head><body><h1>"),
+        F.col("lang"),
+        F.lit("</h1><p>"),
+        F.col("text"),
+        F.lit('</p><a href="u'),
+        F.col("doc_id").cast("string"),
+        F.lit('">more</a>'),
+        F.when(F.col("doc_id") % 3 == 0, F.lit('<a href="v">x</a>')).otherwise(
+            F.lit("")
+        ),
+        F.lit("</body></html>"),
+    )
+    page = d.select("doc_id", html.alias("html"))
+    clean = F.trim(
+        F.regexp_replace(
+            F.regexp_replace(
+                F.regexp_replace(F.col("html"), "<script>.*?</script>", " "),
+                "<[^>]*>",
+                " ",
+            ),
+            " +",
+            " ",
+        )
+    )
+    return page.select(
+        "doc_id",
+        clean.alias("clean_text"),
+        F.length(clean).cast("bigint").alias("n_chars_clean"),
+        F.size(F.regexp_extract_all(F.col("html"), F.lit("<a href="), 0))
+        .cast("int")
+        .alias("n_links"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# text_minhash_containment — asymmetric containment at LSH scale.
+
+CONTAIN_EST_TAU = 0.7  # keep pairs whose ESTIMATED containment >= tau
+CONTAIN_CAP = 8  # dedup_minhash's per-doc candidate cap
+
+
+def _containment_oracle() -> str:
+    from terasort_spark.operators.llm_dedup import N_HASHES, lsh_candidates_sql
+
+    agree = " + ".join(
+        f"(CASE WHEN sa.mh{i} = sb.mh{i} THEN 1 ELSE 0 END)"
+        for i in range(N_HASHES)
+    )
+    ej = f"(CAST(({agree}) AS DOUBLE) / {N_HASHES})"
+    cont = f"((({ej} / (1 + {ej})) * (len(ta.toks) + len(tb.toks))) / len(tb.toks))"
+    return f"""
+WITH {lsh_candidates_sql(cap=CONTAIN_CAP)}
+SELECT c.a_id, c.b_id,
+       {o_rnd(ej, "est_jaccard")},
+       {o_rnd(cont, "containment")}
+FROM capped c
+JOIN th_t ta ON ta.doc_id = c.a_id
+JOIN th_t tb ON tb.doc_id = c.b_id
+JOIN sig sa ON sa.doc_id = c.a_id
+JOIN sig sb ON sb.doc_id = c.b_id
+WHERE {o_rnd(cont)} >= {CONTAIN_EST_TAU!r}
+"""
+
+
+@register("text_minhash_containment", oracle=_containment_oracle())
+def text_minhash_containment(spark, sf_dir):
+    """Asymmetric containment at LSH scale: how much of candidate doc B
+    lives inside doc A — the signal that catches quotes, boilerplate
+    inclusions and subset-crawls that symmetric Jaccard dilutes
+    (|A∩B|/|A∪B| is small when A is much larger than B even if B ⊂ A).
+    sim_containment computes this exactly but only under a hard
+    doc-count bound; this operator rides dedup_minhash's banded
+    candidate generation (lsh_candidates — same signatures, same
+    bands, same per-doc cap) and ESTIMATES containment from signature
+    agreement without ever re-touching token sets pairwise:
+    Ĵ = (1/32)·Σ 1[mh_i(A)=mh_i(B)], |A∩B| ≈ Ĵ/(1+Ĵ)·(|A|+|B|),
+    containment(B) = |A∩B|/|B| with exact set sizes.
+
+    Deterministic estimate: signature agreement is an integer count and
+    the arithmetic is a fixed-order IEEE expression, so the estimate —
+    not just the candidate set — replays bit-for-bit in the oracle.
+
+    100 TB: identical cost shape to dedup_minhash (the signatures and
+    banding ARE dedup_minhash's); the estimation join moves 32 longs
+    per doc instead of token arrays, so verification bandwidth is
+    constant-size per candidate regardless of document length."""
+    from terasort_spark.operators.llm_dedup import N_HASHES, lsh_candidates
+
+    sig, pairs = lsh_candidates(spark, sf_dir, per_doc_cap=CONTAIN_CAP)
+    a = sig.select(
+        F.col("doc_id").alias("a_id"),
+        F.size("toks").alias("na"),
+        *[F.col(f"mh{i}").alias(f"amh{i}") for i in range(N_HASHES)],
+    )
+    b = sig.select(
+        F.col("doc_id").alias("b_id"),
+        F.size("toks").alias("nb"),
+        *[F.col(f"mh{i}").alias(f"bmh{i}") for i in range(N_HASHES)],
+    )
+    j = pairs.join(a, "a_id").join(b, "b_id")
+    agree = F.lit(0)
+    for i in range(N_HASHES):
+        agree = agree + F.when(
+            F.col(f"amh{i}") == F.col(f"bmh{i}"), 1
+        ).otherwise(0)
+    ej = agree.cast("double") / F.lit(N_HASHES)
+    cont = ((ej / (F.lit(1) + ej)) * (F.col("na") + F.col("nb"))) / F.col("nb")
+    return (
+        j.select(
+            "a_id",
+            "b_id",
+            rnd(ej, "est_jaccard"),
+            rnd(cont, "containment"),
+        )
+        .filter(F.col("containment") >= CONTAIN_EST_TAU)
+    )
+
+
+# ---------------------------------------------------------------------------
+# text_wordpiece — greedy longest-match-first subword segmentation
+
+WP_MAXLEN = 12  # words longer than this are out of segmentation scope
+WP_PIECE_LEN = 4  # max candidate piece length
+WP_MULTI_KEEP = 300  # multi-char pieces kept PER CLASS (initial / cont)
+WP_TOP_WORDS = 200  # output rows: most frequent words
+
+
+def _wp_inventory(word_counts):
+    """WordPiece-style piece inventory over the word histogram: every
+    substring of length 1..WP_PIECE_LEN, weighted by word frequency and
+    CLASSED by position — initial (word start) vs continuation (the
+    '##' pieces). All single chars of each class are kept (coverage
+    guarantee: every encodable word segments without [UNK]) plus the
+    WP_MULTI_KEEP most frequent multi-char pieces per class, ties to
+    the lexicographically smaller piece. Returns set[(txt, is_cont)]."""
+    cnt: Counter = Counter()
+    for w, n in word_counts:
+        for s in range(len(w)):
+            for ln in range(1, WP_PIECE_LEN + 1):
+                if s + ln <= len(w):
+                    cnt[(w[s : s + ln], s > 0)] += n
+    kept = {k for k in cnt if len(k[0]) == 1}
+    for is_cont in (False, True):
+        multis = sorted(
+            (
+                (t, c)
+                for (t, ic), c in cnt.items()
+                if ic == is_cont and len(t) > 1
+            ),
+            key=lambda tc: (-tc[1], tc[0]),
+        )[:WP_MULTI_KEEP]
+        kept |= {(t, is_cont) for t, _ in multis}
+    return kept
+
+
+def _wp_encode(w: str, kept) -> list[str]:
+    """The WordPiece inference rule: at each position take the LONGEST
+    inventory piece of the position's class. Always terminates without
+    [UNK] because single chars of both classes are in the inventory."""
+    pos, pieces = 0, []
+    while pos < len(w):
+        for ln in range(min(WP_PIECE_LEN, len(w) - pos), 0, -1):
+            t = w[pos : pos + ln]
+            if (t, pos > 0) in kept:
+                pieces.append(("##" + t) if pos > 0 else t)
+                pos += ln
+                break
+    return pieces
+
+
+def _wp_base_sql() -> str:
+    lens = ",".join(str(i) for i in range(1, WP_PIECE_LEN + 1))
+    return f"""
+vocab AS MATERIALIZED (
+  SELECT w, CAST(count(*) AS BIGINT) AS n
+  FROM (
+    SELECT unnest(string_split(lower(text), ' ')) AS w
+    FROM documents
+    WHERE text IS NOT NULL AND length(text) > 0
+  )
+  WHERE length(w) > 0
+  GROUP BY w
+  ORDER BY n DESC, w
+  LIMIT {VOCAB_CAP}
+),
+v12 AS MATERIALIZED (
+  SELECT w, n FROM vocab WHERE length(w) <= {WP_MAXLEN}
+),
+cand AS MATERIALIZED (
+  SELECT substr(w, s, l) AS txt, s > 1 AS is_cont, SUM(n) AS cnt
+  FROM (SELECT w, n, unnest(generate_series(1, length(w))) AS s FROM v12)
+  CROSS JOIN (SELECT unnest([{lens}]) AS l)
+  WHERE s + l - 1 <= length(w)
+  GROUP BY txt, is_cont
+),
+kept AS MATERIALIZED (
+  SELECT txt, is_cont FROM cand WHERE length(txt) = 1
+  UNION ALL
+  SELECT txt, is_cont FROM (
+    SELECT txt, is_cont,
+           row_number() OVER (PARTITION BY is_cont ORDER BY cnt DESC, txt) AS rk
+    FROM cand WHERE length(txt) > 1
+  ) WHERE rk <= {WP_MULTI_KEEP}
+),
+s0 AS MATERIALIZED (
+  SELECT w, n, CAST(1 AS BIGINT) AS pos, 0 AS n_pieces, '' AS seg
+  FROM (SELECT w, n FROM v12 ORDER BY n DESC, w LIMIT {WP_TOP_WORDS})
+)"""
+
+
+def _wp_step_sql(k: int) -> str:
+    """One unrolled greedy step: every unfinished word matches the kept
+    pieces of its position's class at each length (equi-joins on the
+    substr key — the hash-joinable form of 'longest prefix'), the
+    longest wins (row_number over plen DESC — unique: one piece per
+    (word, pos, length, class)), finished words carry forward."""
+    p = k - 1
+    branches = []
+    for ln in range(1, WP_PIECE_LEN + 1):
+        branches.append(
+            f"""SELECT s.w, s.n, s.pos, s.n_pieces, s.seg, p.txt, {ln} AS plen
+      FROM s{p} s JOIN kept p
+        ON p.is_cont = (s.pos > 1) AND length(p.txt) = {ln}
+           AND p.txt = substr(s.w, CAST(s.pos AS INT), {ln})
+      WHERE s.pos <= length(s.w) AND s.pos + {ln} - 1 <= length(s.w)"""
+        )
+    u = "\n      UNION ALL ".join(branches)
+    return f"""
+m{k} AS MATERIALIZED (
+  SELECT *, row_number() OVER (PARTITION BY w ORDER BY plen DESC) AS rk
+  FROM (
+      {u}
+  )
+),
+s{k} AS MATERIALIZED (
+  SELECT w, n, pos + plen AS pos, n_pieces + 1 AS n_pieces,
+         seg || CASE WHEN pos > 1 THEN ' ##' ELSE '' END || txt AS seg
+  FROM m{k} WHERE rk = 1
+  UNION ALL
+  SELECT w, n, pos, n_pieces, seg FROM s{p} WHERE pos > length(w)
+)"""
+
+
+def _wp_oracle() -> str:
+    parts = [_wp_base_sql()] + [
+        _wp_step_sql(k) for k in range(1, WP_MAXLEN + 1)
+    ]
+    return (
+        "WITH "
+        + ",".join(parts)
+        + f"\nSELECT w, n, n_pieces, seg FROM s{WP_MAXLEN}"
+    )
+
+
+@register("text_wordpiece", oracle=_wp_oracle())
+def text_wordpiece(spark, sf_dir):
+    """WordPiece tokenizer (the BERT family's inference rule, built
+    from the public algorithm): derive a piece inventory from the word
+    histogram — every substring up to WP_PIECE_LEN weighted by word
+    frequency, classed initial vs continuation ('##'), all single
+    chars kept per class for coverage plus the WP_MULTI_KEEP most
+    frequent multi-char pieces per class — then segment each word by
+    GREEDY LONGEST-MATCH-FIRST. Completes the tokenizer triad: BPE
+    (merge-rank replay), unigram-LM (Viterbi), WordPiece (greedy).
+
+    Architecture mirrors text_bpe_train / text_unigram_lm: the ONE
+    corpus-sized step is the word-histogram shuffle (map-side combine);
+    inventory and matcher run over vocab-sized driver model state.
+    Exact oracle: the greedy loop unrolls into WP_MAXLEN steps — each
+    step equi-joins unfinished words to the piece table per candidate
+    length (substr keys, hash-joinable) and keeps the longest — so the
+    FULL segmentation string is hash-checked, not just piece counts.
+    Emits the WP_TOP_WORDS most frequent words with piece count and
+    the '##'-marked segmentation."""
+    wc = [(r["w"], int(r["n"])) for r in _word_counts(spark, sf_dir).collect()]
+    v12 = [(w, n) for w, n in wc if len(w) <= WP_MAXLEN]
+    kept = _wp_inventory(v12)
+    top = sorted(v12, key=lambda t: (-t[1], t[0]))[:WP_TOP_WORDS]
+    rows = []
+    for w, n in top:
+        pieces = _wp_encode(w, kept)
+        rows.append((w, n, len(pieces), " ".join(pieces)))
+    return spark.createDataFrame(
+        rows, "w string, n bigint, n_pieces int, seg string"
+    )
+
+
+# ---------------------------------------------------------------------------
+# text_kneser_ney
+
+_KN_D = 0.75  # absolute discount
+_KN_TOP = 10  # per-language output rows
+
+
+# ``text_kneser_ney`` — interpolated Kneser–Ney bigram probabilities
+# (absolute discount D=0.75 + continuation-probability backoff): the
+# smoothing that actually ships in n-gram LM quality filters
+# (CCNet/KenLM lineage), built from four count aggregations — no
+# per-token Python. Complements text_bigram_lm's unsmoothed MLE.
+@register(
+    "text_kneser_ney",
+    oracle=f"""
+WITH toks AS (
+    SELECT doc_id, lang, string_split(lower(text), ' ') AS ws FROM documents
+),
+big AS (
+    SELECT lang, ws[i] AS w1, ws[i+1] AS w2, count(*) AS c
+    FROM toks, LATERAL (SELECT unnest(generate_series(1, len(ws)-1)) AS i)
+    WHERE ws[i] <> '' AND ws[i+1] <> ''
+    GROUP BY lang, ws[i], ws[i+1]
+),
+ctx AS (SELECT lang, w1, sum(c) AS c1, count(*) AS n_follow
+        FROM big GROUP BY lang, w1),
+cont AS (SELECT lang, w2, count(*) AS n_prec FROM big GROUP BY lang, w2),
+types AS (SELECT lang, count(*) AS n_types FROM big GROUP BY lang),
+kn AS (
+    SELECT b.lang, b.w1, b.w2,
+           (CAST(greatest(b.c - {_KN_D!r}, 0.0) AS DOUBLE) / ctx.c1)
+           + ({_KN_D!r} * ctx.n_follow / ctx.c1)
+             * (CAST(cont.n_prec AS DOUBLE) / types.n_types) AS p
+    FROM big b
+    JOIN ctx ON ctx.lang = b.lang AND ctx.w1 = b.w1
+    JOIN cont ON cont.lang = b.lang AND cont.w2 = b.w2
+    JOIN types ON types.lang = b.lang
+)
+SELECT lang, w1, w2, p_kn, rn FROM (
+    SELECT lang, w1, w2,
+           floor(p * 1000000 + 0.5) / 1000000 AS p_kn,
+           CAST(row_number() OVER (
+               PARTITION BY lang
+               ORDER BY floor(p * 1000000 + 0.5) / 1000000 DESC, w1, w2)
+               AS INTEGER) AS rn
+    FROM kn)
+WHERE rn <= {_KN_TOP}
+""",
+)
+def text_kneser_ney(spark, sf_dir):
+    """Interpolated Kneser–Ney bigram model over the corpus, per
+    language; output = each language's top-10 bigrams by smoothed
+    probability. P_KN(w2|w1) = max(c(w1w2)-D,0)/c(w1) +
+    (D·N1+(w1·)/c(w1)) · N1+(·w2)/|bigram types| with D=0.75 — the
+    continuation-probability backoff that makes "francisco" unlikely
+    after anything but "san", which raw MLE (text_bigram_lm) cannot
+    express. Everything is four count aggregations over the exploded
+    bigram stream joined back on (lang, w1)/(lang, w2) — model size is
+    vocabulary-shaped, never corpus-shaped, and the probability
+    expression tree is mirrored operation-for-operation in the oracle
+    (same left-associative order, 6dp floor-round).
+
+    100 TB: identical shape to the production KenLM-prep pipelines —
+    one shuffle to bigram counts (map-side combined), then
+    vocabulary-sized joins; per-language skew is bounded by the
+    vocabulary, not the corpus."""
+    d = table(spark, sf_dir, "documents").select(
+        "lang", F.split(F.lower("text"), " ").alias("ws")
+    )
+    pairs = d.select(
+        "lang",
+        F.explode(
+            F.expr(
+                "filter(zip_with(slice(ws, 1, size(ws) - 1), "
+                "slice(ws, 2, size(ws) - 1), "
+                "(a, b) -> struct(a as w1, b as w2)), "
+                "p -> p.w1 <> '' AND p.w2 <> '')"
+            )
+        ).alias("bg"),
+    ).select("lang", F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"))
+    big = pairs.groupBy("lang", "w1", "w2").agg(F.count(F.lit(1)).alias("c"))
+    ctx = big.groupBy("lang", "w1").agg(
+        F.sum("c").alias("c1"), F.count(F.lit(1)).alias("n_follow")
+    )
+    cont = big.groupBy("lang", "w2").agg(F.count(F.lit(1)).alias("n_prec"))
+    types = big.groupBy("lang").agg(F.count(F.lit(1)).alias("n_types"))
+    p = (
+        F.greatest(F.col("c") - F.lit(_KN_D), F.lit(0.0)).cast("double")
+        / F.col("c1")
+    ) + ((F.lit(_KN_D) * F.col("n_follow") / F.col("c1"))
+         * (F.col("n_prec").cast("double") / F.col("n_types")))
+    w = Window.partitionBy("lang").orderBy(
+        F.desc("p_kn"), F.asc("w1"), F.asc("w2")
+    )
+    return (
+        big.join(ctx, ["lang", "w1"])
+        .join(cont, ["lang", "w2"])
+        .join(F.broadcast(types), "lang")
+        .withColumn("p_kn", rnd(p, nd=6))
+        .withColumn("rn", F.row_number().over(w).cast("int"))
+        .where(F.col("rn") <= _KN_TOP)
+        .select("lang", "w1", "w2", "p_kn", "rn")
+    )
+
+
+@register(
+    "text_tokens",
+    oracle=f"""
+WITH toks AS (
+  SELECT lang, doc_id, unnest(regexp_extract_all(text, '([a-z]{{1,4}})', 1)) AS tok
+  FROM documents
+)
+SELECT lang,
+       count(*) AS n_tokens,
+       count(DISTINCT tok) AS n_vocab,
+       {o_rnd("count(*) * 1.0 / count(DISTINCT doc_id)", "tokens_per_doc")}
+FROM toks
+GROUP BY lang
+""",
+)
+def text_tokens(spark, sf_dir):
+    """BPE-ish token counting: greedy <=4-char subword chunks via
+    regexp_extract_all (a stand-in for a real BPE merge table — the
+    Spark-side shape is identical: stringly tokenize, explode, count).
+    Vocabulary size + tokens/doc per language, one explode + one agg."""
+    d = table(spark, sf_dir, "documents")
+    toks = d.select(
+        "lang",
+        "doc_id",
+        F.explode(F.regexp_extract_all("text", F.lit("([a-z]{1,4})"))).alias("tok"),
+    )
+    return toks.groupBy("lang").agg(
+        F.count(F.lit(1)).alias("n_tokens"),
+        F.countDistinct("tok").alias("n_vocab"),
+        rnd(
+            F.count(F.lit(1)) * 1.0 / F.countDistinct("doc_id"), "tokens_per_doc"
+        ),
     )

@@ -24,7 +24,15 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from terasort_spark.catalog import table
-from terasort_spark.operators._util import rnd
+from terasort_spark.operators._util import o_rnd, rnd
+from terasort_spark.operators.llm_similarity import (
+    _dot_sql,
+    _SQ8_CTES,
+    _SQ8_QCUT,
+    _SQ8_TOPK,
+    dot_fold,
+    sim_cosine_sq8,
+)
 from terasort_spark.registry import register
 
 LR = 2.0
@@ -689,4 +697,738 @@ def ml_confusion(spark, sf_dir):
         ratio(tp, tp + fp, "precision_"),
         ratio(tp, tp + fn, "recall_"),
         ratio(2 * tp, 2 * tp + fp + fn, "f1"),
+    )
+
+
+# --------------------------------------------------------------------------
+# ml_mrr — retrieval evaluation: MRR / hit@5 of the IVF index against
+# exact-cosine ground truth.
+
+
+def _mrr_oracle() -> str:
+    # composed from the SAME constants sim_cosine_ivf's oracle uses
+    # (llm_similarity.IVF_BUCKET_CTES / IVF_TOPK_INNER), so the index
+    # and its evaluation metric cannot drift apart silently.
+    from terasort_spark.operators.llm_similarity import (
+        _COSINE_SQL,
+        IVF_BUCKET_CTES,
+        IVF_TOPK_INNER,
+    )
+
+    return f"""
+WITH {IVF_BUCKET_CTES},
+ivf AS MATERIALIZED (
+  SELECT q_id, c_id, rn FROM (
+    {IVF_TOPK_INNER}
+  ) WHERE rn <= 5
+),
+exact AS MATERIALIZED (
+  SELECT q_id, c_id AS true_c FROM (
+    SELECT q.vec_id AS q_id, c.vec_id AS c_id,
+           row_number() OVER (
+               PARTITION BY q.vec_id
+               ORDER BY {o_rnd(_COSINE_SQL)} DESC, c.vec_id) AS rn
+    FROM b q JOIN b c ON c.vec_id != q.vec_id
+    WHERE q.vec_id < 10
+  ) WHERE rn = 1
+)
+SELECT e.q_id, e.true_c,
+       floor(coalesce(1.0 / i.rn, 0.0) * 10000 + 0.5) / 10000 AS rr,
+       CAST(CASE WHEN i.rn IS NOT NULL THEN 1 ELSE 0 END AS INTEGER) AS hit5
+FROM exact e LEFT JOIN ivf i ON i.q_id = e.q_id AND i.c_id = e.true_c
+"""
+
+
+@register("ml_mrr", oracle=_mrr_oracle())
+def ml_mrr(spark, sf_dir):
+    """ANN index evaluation — the metric every retrieval system ships
+    with: for each query, find the TRUE nearest neighbor by exact
+    cosine over all candidates, then score where the deployed index
+    (sim_cosine_ivf's multi-probe top-5) ranks it. Reports reciprocal
+    rank (0 when missed) and hit@5 per query; MRR/recall@5 are the
+    averages of these columns.
+
+    Scale: the ground-truth side is deliberately brute-force — an
+    EVALUATION runs over a bounded query sample (10 here; thousands in
+    production), so the non-equi join is |Q| x n with a broadcast-able
+    Q, not n². The system side reuses the bucketed IVF plan unchanged.
+    The final scoring joins are |Q|-sized."""
+    from terasort_spark.operators.llm_similarity import sim_cosine_ivf
+
+    sys_topk = sim_cosine_ivf(spark, sf_dir).select("q_id", "c_id", "rn")
+
+    e = table(spark, sf_dir, "embeddings").select(
+        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("emb")
+    )
+    q = e.filter(F.col("vec_id") < 10).select(
+        F.col("vec_id").alias("q_id"), F.col("emb").alias("q_emb")
+    )
+    c = e.select(F.col("vec_id").alias("c_id"), F.col("emb").alias("c_emb"))
+
+    from terasort_spark.operators.llm_similarity import dot_fold as dot
+
+    cosine = dot(F.col("q_emb"), F.col("c_emb")) / (
+        F.sqrt(dot(F.col("q_emb"), F.col("q_emb")))
+        * F.sqrt(dot(F.col("c_emb"), F.col("c_emb")))
+    )
+    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
+    # broadcast the BOUNDED query sample (10 rows) so the non-equi join
+    # streams the candidate side — at 100 TB the candidates must never
+    # be the build side
+    exact = (
+        F.broadcast(q).join(c, F.col("c_id") != F.col("q_id"))
+        .withColumn("cosine", rnd(cosine))
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= 1)
+        .select("q_id", F.col("c_id").alias("true_c"))
+    )
+    hit = sys_topk.withColumnRenamed("c_id", "true_c")
+    return exact.join(hit, ["q_id", "true_c"], "left").select(
+        "q_id",
+        "true_c",
+        rnd(F.coalesce(1.0 / F.col("rn"), F.lit(0.0)), "rr"),
+        F.when(F.col("rn").isNotNull(), F.lit(1)).otherwise(F.lit(0)).alias("hit5"),
+    )
+
+
+# IDCG@5 for the full relevance ladder 5..1, quantized exactly like the
+# per-term DCG contributions; a Python-side constant inlined into BOTH
+# engines so no cross-engine log/rounding divergence is possible.
+_IDCG6 = sum(
+    math.floor((6 - i) / math.log2(i + 1) * 1000000 + 0.5)
+    for i in range(1, _SQ8_TOPK + 1)
+)
+
+
+def _ndcg_oracle() -> str:
+    exact_cos = o_rnd(f"{_dot_sql('a.v', 'b.v')} / (a.nrm * b.nrm)")
+    return f"""
+WITH {_SQ8_CTES},
+exact AS (
+  SELECT q_id, c_id, 6 - rn AS rel FROM (
+    SELECT a.vec_id AS q_id, b.vec_id AS c_id,
+           row_number() OVER (PARTITION BY a.vec_id
+               ORDER BY {exact_cos} DESC, b.vec_id) AS rn
+    FROM sq a JOIN sq b ON b.vec_id != a.vec_id
+    WHERE a.vec_id < {_SQ8_QCUT}
+  ) WHERE rn <= {_SQ8_TOPK}
+),
+terms AS (
+  SELECT s.q_id,
+         CAST(floor(coalesce(e.rel, 0) / log2(s.rn + 1) * 1000000 + 0.5)
+              AS BIGINT) AS t6,
+         CASE WHEN e.rel IS NOT NULL THEN 1 ELSE 0 END AS hit
+  FROM sq8_topk s
+  LEFT JOIN exact e ON e.q_id = s.q_id AND e.c_id = s.c_id
+)
+SELECT q_id,
+       CAST(sum(hit) AS BIGINT) AS hits,
+       floor(sum(t6) / 100.0 + 0.5) / 10000 AS dcg,
+       floor(sum(t6) / {_IDCG6} * 10000 + 0.5) / 10000 AS ndcg
+FROM terms GROUP BY q_id
+"""
+
+
+@register("ml_ndcg", oracle=_ndcg_oracle())
+def ml_ndcg(spark, sf_dir):
+    """NDCG@5 of the deployed SQ8 index against graded exact-cosine
+    relevance — the second standard retrieval metric next to ml_mrr's
+    MRR/hit@5 (binary relevance): graded NDCG distinguishes "found the
+    3rd-best at rank 1" from "found the best at rank 1", which is what
+    a ranking regression actually looks like in production.
+
+    Ground truth: exact top-{_SQ8_TOPK} per query, rel = 6 - rank. Per
+    system position i: DCG term rel_i / log2(i+1), quantized to 6dp
+    int64 BEFORE the per-query sum so the aggregate is exact integer
+    addition (engine- and partition-invariant); NDCG divides by the
+    IDCG constant of the full 5..1 ladder, inlined identically into
+    both engines. Scale: the evaluation joins are |Q|-bounded (the
+    query sample is broadcast, candidates stream — same discipline as
+    ml_mrr); the system side reuses sim_cosine_sq8's plan unchanged
+    via the shared CTE/function, so index and metric cannot drift."""
+    sys_topk = sim_cosine_sq8(spark, sf_dir).select("q_id", "c_id", "rn")
+
+    e = (
+        table(spark, sf_dir, "embeddings")
+        .filter(F.col("embedding").isNotNull())
+        .select(
+            "vec_id",
+            F.transform("embedding", lambda x: x.cast("double")).alias("v"),
+        )
+        .withColumn("amax", F.array_max(F.transform("v", F.abs)))
+        .filter(F.col("amax") > 0)
+        .withColumn("nrm", F.sqrt(dot_fold(F.col("v"), F.col("v"))))
+    )
+    q = F.broadcast(
+        e.filter(F.col("vec_id") < _SQ8_QCUT).select(
+            F.col("vec_id").alias("q_id"),
+            F.col("v").alias("qv"),
+            F.col("nrm").alias("nq"),
+        )
+    )
+    c = e.select(
+        F.col("vec_id").alias("c_id"),
+        F.col("v").alias("cv"),
+        F.col("nrm").alias("nc"),
+    )
+    cosine = dot_fold(F.col("qv"), F.col("cv")) / (F.col("nq") * F.col("nc"))
+    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
+    exact = (
+        q.join(c, F.col("c_id") != F.col("q_id"))
+        .withColumn("cosine", rnd(cosine))
+        .withColumn("rn_x", F.row_number().over(w))
+        .filter(F.col("rn_x") <= _SQ8_TOPK)
+        .select("q_id", "c_id", (F.lit(6) - F.col("rn_x")).alias("rel"))
+    )
+    t6 = F.floor(
+        F.coalesce(F.col("rel"), F.lit(0)) / F.log2(F.col("rn") + 1) * 1000000
+        + 0.5
+    ).cast("bigint")
+    return (
+        sys_topk.join(exact, ["q_id", "c_id"], "left")
+        .select(
+            "q_id",
+            t6.alias("t6"),
+            F.when(F.col("rel").isNotNull(), 1).otherwise(0).alias("hit"),
+        )
+        .groupBy("q_id")
+        .agg(F.sum("t6").alias("dcg6"), F.sum("hit").cast("bigint").alias("hits"))
+        .select(
+            "q_id",
+            "hits",
+            (F.floor(F.col("dcg6") / 100.0 + 0.5) / 10000).alias("dcg"),
+            (
+                F.floor(F.col("dcg6") / F.lit(_IDCG6) * 10000 + 0.5) / 10000
+            ).alias("ndcg"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# ml_adaboost — integer-weighted boosting over histogram stumps
+
+ADA_ROUNDS = 3
+
+
+def _ada_round_sql(t: int) -> str:
+    """One unrolled boosting round over the weighted class histogram.
+
+    c{t}: running + total class weights by feature value (the stump
+          search scans #distinct-values rows, never documents).
+    e{t}: weighted error of every (threshold, polarity) stump;
+          polarity +1 predicts positive on x <= thr, -1 on x > thr.
+    b{t}: argmin by (err, thr, polarity) — all integers, total order.
+    h{t}: weight update — misclassified examples DOUBLE (the declared
+          unit-alpha integer variant of discrete AdaBoost; weights stay
+          exact int64, bounded by 2^rounds) — and the ensemble vote
+          advances by the stump's +-1 prediction.
+    a{t}: training accuracy of the vote-so-far against the ORIGINAL
+          unweighted counts (vote > 0 predicts positive)."""
+    p = t - 1
+    return f"""
+c{t} AS MATERIALIZED (
+  SELECT x, sum(wp) OVER (ORDER BY x ROWS UNBOUNDED PRECEDING) AS cwp,
+         sum(wn) OVER (ORDER BY x ROWS UNBOUNDED PRECEDING) AS cwn,
+         sum(wp) OVER () AS twp, sum(wn) OVER () AS twn,
+         sum(cnt) OVER (ORDER BY x ROWS UNBOUNDED PRECEDING) AS ccnt,
+         sum(cnt) OVER () AS tcnt
+  FROM h{p}
+),
+e{t} AS MATERIALIZED (
+  SELECT x AS thr, 1 AS pol, cwn + (twp - cwp) AS err, twp + twn AS tot
+  FROM c{t} WHERE ccnt < tcnt
+  UNION ALL
+  SELECT x AS thr, -1 AS pol, cwp + (twn - cwn) AS err, twp + twn AS tot
+  FROM c{t} WHERE ccnt < tcnt
+),
+b{t} AS MATERIALIZED (
+  SELECT thr, pol, err, tot FROM e{t} ORDER BY err, thr, pol LIMIT 1
+),
+h{t} AS MATERIALIZED (
+  SELECT h.x, h.cnt, h.pos,
+         h.wp * CASE WHEN (b.pol = 1 AND h.x > b.thr)
+                       OR (b.pol = -1 AND h.x <= b.thr)
+                     THEN 2 ELSE 1 END AS wp,
+         h.wn * CASE WHEN (b.pol = 1 AND h.x <= b.thr)
+                       OR (b.pol = -1 AND h.x > b.thr)
+                     THEN 2 ELSE 1 END AS wn,
+         h.vote + CASE WHEN (b.pol = 1 AND h.x <= b.thr)
+                         OR (b.pol = -1 AND h.x > b.thr)
+                       THEN 1 ELSE -1 END AS vote
+  FROM h{p} h CROSS JOIN b{t} b
+),
+a{t} AS MATERIALIZED (
+  SELECT SUM(CASE WHEN vote > 0 THEN pos ELSE cnt - pos END) AS correct,
+         SUM(cnt) AS n
+  FROM h{t}
+)"""
+
+
+def _ada_oracle() -> str:
+    parts = [
+        """
+hist AS MATERIALIZED (
+  SELECT n_chars AS x, CAST(count(*) AS BIGINT) AS cnt,
+         CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS pos
+  FROM documents WHERE n_chars IS NOT NULL GROUP BY n_chars
+),
+h0 AS MATERIALIZED (
+  SELECT x, cnt, pos, pos AS wp, cnt - pos AS wn, CAST(0 AS BIGINT) AS vote
+  FROM hist
+)"""
+    ] + [_ada_round_sql(t) for t in range(1, ADA_ROUNDS + 1)]
+    finals = "\nUNION ALL ".join(
+        f"""SELECT {t} AS round, CAST(b{t}.thr AS BIGINT) AS threshold,
+       CAST(b{t}.pol AS INT) AS polarity, CAST(b{t}.err AS BIGINT) AS err_w,
+       CAST(b{t}.tot AS BIGINT) AS total_w,
+       floor(CAST(a{t}.correct AS DOUBLE) / a{t}.n * 1000000 + 0.5) / 1000000 AS acc
+FROM b{t} CROSS JOIN a{t}"""
+        for t in range(1, ADA_ROUNDS + 1)
+    )
+    return "WITH " + ",".join(parts) + f"\nSELECT * FROM (\n{finals}\n) ORDER BY round"
+
+
+@register("ml_adaboost", oracle=_ada_oracle())
+def ml_adaboost(spark, sf_dir):
+    """Boosted decision stumps on the feature histogram — ml_stump
+    carried to an ensemble with the AdaBoost reweighting loop in a
+    DECLARED INTEGER VARIANT: unit alpha, misclassified example weights
+    double each round (exact int64, bounded by 2^rounds), final
+    classifier is the majority vote of the per-round stumps. Stump t
+    minimizes weighted error over (threshold, polarity) with a total
+    integer tie-break, so retraining is bit-identical.
+
+    The distributed split is the histogram-GBDT contract: the corpus
+    contributes ONE map-combined groupBy (feature value -> class
+    counts); every boosting round then scans #distinct-values rows of
+    driver model state, never documents — at 100 TB round cost is
+    independent of corpus size. Emits per round: the stump, its
+    weighted error over the round's total weight, and the ensemble's
+    training accuracy so far (the boosting curve). Exact oracle:
+    ADA_ROUNDS unrolled CTE rounds over the same histogram."""
+    # a NULL feature value cannot be thresholded — excluded in BOTH
+    # engines (semantic, not defensive; the null-corpus sweep's rule)
+    d = table(spark, sf_dir, "documents").filter(
+        F.col("n_chars").isNotNull()
+    )
+    hist = sorted(
+        (int(r["x"]), int(r["cnt"]), int(r["pos"]))
+        for r in d.groupBy(F.col("n_chars").alias("x"))
+        .agg(
+            F.count(F.lit(1)).alias("cnt"),
+            F.sum(
+                F.when(F.col("lang") == "en", 1).otherwise(0)
+            ).alias("pos"),
+        )
+        .collect()
+    )
+    xs = [x for x, _, _ in hist]
+    cnt = {x: c for x, c, _ in hist}
+    pos = {x: p for x, _, p in hist}
+    wp = {x: pos[x] for x in xs}
+    wn = {x: cnt[x] - pos[x] for x in xs}
+    vote = {x: 0 for x in xs}
+    n_total = sum(cnt.values())
+    rows = []
+    for t in range(1, ADA_ROUNDS + 1):
+        if n_total == 0 or len(xs) < 2:
+            break  # no splittable histogram (empty corpus)
+        twp, twn = sum(wp.values()), sum(wn.values())
+        best = None
+        cwp = cwn = ccnt = 0
+        for x in xs:
+            cwp += wp[x]
+            cwn += wn[x]
+            ccnt += cnt[x]
+            if ccnt >= n_total:
+                break
+            for pol, err in (
+                (1, cwn + (twp - cwp)),
+                (-1, cwp + (twn - cwn)),
+            ):
+                key = (err, x, pol)
+                if best is None or key < best:
+                    best = key
+        err, thr, pol = best
+        for x in xs:
+            pred_pos = (pol == 1 and x <= thr) or (pol == -1 and x > thr)
+            if pred_pos:
+                wn[x] *= 2
+                vote[x] += 1
+            else:
+                wp[x] *= 2
+                vote[x] -= 1
+        correct = sum(
+            pos[x] if vote[x] > 0 else cnt[x] - pos[x] for x in xs
+        )
+        import math
+
+        acc = math.floor(correct / n_total * 1000000 + 0.5) / 1000000
+        rows.append((t, thr, pol, err, twp + twn, acc))
+    return spark.createDataFrame(
+        rows,
+        "round int, threshold bigint, polarity int, err_w bigint, "
+        "total_w bigint, acc double",
+    ).orderBy("round")
+
+
+# ---------------------------------------------------------------------------
+# ml_tree_depth2 — histogram decision tree grown one level past the stump
+
+_GINI_SQL = """(ln_ * (1.0 - (CAST(lp AS DOUBLE) / ln_) * (CAST(lp AS DOUBLE) / ln_)
+                    - (CAST(ln_ - lp AS DOUBLE) / ln_)
+                      * (CAST(ln_ - lp AS DOUBLE) / ln_))
+         + rn_ * (1.0 - (CAST(rp AS DOUBLE) / rn_) * (CAST(rp AS DOUBLE) / rn_)
+                      - (CAST(rn_ - rp AS DOUBLE) / rn_)
+                        * (CAST(rn_ - rp AS DOUBLE) / rn_))) / n"""
+
+
+def _tree_node_sql(src: str, out: str) -> str:
+    """Best gini split over one node's histogram CTE ``src`` —
+    ml_stump's search, reused per node."""
+    return f"""
+{out}_cum AS (
+  SELECT node, x,
+         sum(cnt) OVER (PARTITION BY node ORDER BY x ROWS UNBOUNDED PRECEDING) AS ln_,
+         sum(pos) OVER (PARTITION BY node ORDER BY x ROWS UNBOUNDED PRECEDING) AS lp,
+         sum(cnt) OVER (PARTITION BY node) AS n,
+         sum(pos) OVER (PARTITION BY node) AS p
+  FROM {src}
+),
+{out} AS MATERIALIZED (
+  SELECT node, threshold, wgini, ln_ AS n_left, rn_ AS n_right FROM (
+    SELECT node, x AS threshold, ln_, n - ln_ AS rn_,
+           {_GINI_SQL} AS wgini,
+           row_number() OVER (PARTITION BY node ORDER BY {_GINI_SQL}, x) AS rk
+    FROM (SELECT node, x, ln_, lp, n, p, n - ln_ AS rn_, p - lp AS rp
+          FROM {out}_cum WHERE ln_ < n)
+  ) WHERE rk = 1
+)"""
+
+
+_TREE_ORACLE = f"""
+WITH hist AS MATERIALIZED (
+  SELECT n_chars AS x, CAST(count(*) AS BIGINT) AS cnt,
+         CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS pos
+  FROM documents WHERE n_chars IS NOT NULL GROUP BY n_chars
+),
+root_h AS (SELECT 'root' AS node, x, cnt, pos FROM hist),
+{_tree_node_sql('root_h', 'root_b')},
+leaf_h AS (
+  SELECT CASE WHEN h.x <= b.threshold THEN 'left' ELSE 'right' END AS node,
+         h.x, h.cnt, h.pos
+  FROM hist h CROSS JOIN root_b b
+),
+{_tree_node_sql('leaf_h', 'leaf_b')}
+SELECT node, CAST(threshold AS BIGINT) AS threshold,
+       floor(wgini * 1000000 + 0.5) / 1000000 AS wgini,
+       CAST(n_left AS BIGINT) AS n_left, CAST(n_right AS BIGINT) AS n_right
+FROM (SELECT * FROM root_b UNION ALL SELECT * FROM leaf_b)
+"""
+
+
+@register("ml_tree_depth2", oracle=_TREE_ORACLE)
+def ml_tree_depth2(spark, sf_dir):
+    """Depth-2 decision tree on the feature histogram: ml_stump's
+    histogram split search applied at the root, then AGAIN inside each
+    child — the recursive step every histogram GBDT takes, still
+    touching only #distinct-values rows per node (the corpus
+    contributes its ONE groupBy). Node assignment is a broadcast of
+    the 1-row root split, so growing a level adds no corpus scan.
+    Fully distributed (no driver model state, unlike ml_adaboost's
+    declared driver loop) — the window's PARTITION BY node runs both
+    child searches in one pass. Emits root/left/right splits with
+    6dp-floored weighted gini; the gini expression is one fixed IEEE
+    formula over exact integer counts, identical in both engines.
+    NULL feature values are excluded in both engines (a null cannot be
+    thresholded, and the engines disagree on null sort placement)."""
+    d = table(spark, sf_dir, "documents").filter(
+        F.col("n_chars").isNotNull()
+    )
+    hist = d.groupBy(F.col("n_chars").alias("x")).agg(
+        F.count(F.lit(1)).alias("cnt"),
+        F.sum(
+                F.when(F.col("lang") == "en", 1).otherwise(0)
+            ).alias("pos"),
+    )
+
+    def gini(nn, pp):
+        pr = pp.cast("double") / nn
+        qr = (nn - pp).cast("double") / nn
+        return 1.0 - pr * pr - qr * qr
+
+    def best_split(h):
+        w_cum = (
+            Window.partitionBy("node")
+            .orderBy("x")
+            .rowsBetween(Window.unboundedPreceding, 0)
+        )
+        w_all = Window.partitionBy("node")
+        cum = h.select(
+            "node",
+            "x",
+            F.sum("cnt").over(w_cum).alias("ln_"),
+            F.sum("pos").over(w_cum).alias("lp"),
+            F.sum("cnt").over(w_all).alias("n"),
+            F.sum("pos").over(w_all).alias("p"),
+        ).filter(F.col("ln_") < F.col("n"))
+        wgini = (
+            F.col("ln_") * gini(F.col("ln_"), F.col("lp"))
+            + (F.col("n") - F.col("ln_"))
+            * gini(F.col("n") - F.col("ln_"), F.col("p") - F.col("lp"))
+        ) / F.col("n")
+        wr = Window.partitionBy("node").orderBy(wgini, "x")
+        return (
+            cum.withColumn("wgini_raw", wgini)
+            .withColumn("rk", F.row_number().over(wr))
+            .filter(F.col("rk") == 1)
+            .select(
+                "node",
+                F.col("x").cast("bigint").alias("threshold"),
+                (
+                    F.floor(F.col("wgini_raw") * 1000000 + F.lit(0.5))
+                    / 1000000
+                ).alias("wgini"),
+                F.col("ln_").cast("bigint").alias("n_left"),
+                (F.col("n") - F.col("ln_")).cast("bigint").alias("n_right"),
+            )
+        )
+
+    root = best_split(hist.withColumn("node", F.lit("root")))
+    leaf_h = hist.join(
+        F.broadcast(root.select(F.col("threshold").alias("thr"))), how="cross"
+    ).withColumn(
+        "node",
+        F.when(F.col("x") <= F.col("thr"), F.lit("left")).otherwise(
+            F.lit("right")
+        ),
+    )
+    leaves = best_split(leaf_h)
+    return root.unionByName(leaves)
+
+
+# ---------------------------------------------------------------------------
+# ml_rouge — clipped n-gram overlap (ROUGE-1 P/R/F1 + ROUGE-2 F1)
+
+ROUGE_PAIRS = 400  # candidate doc_ids < this (odd ids; ref = id - 1)
+
+
+def _rouge_oracle() -> str:
+    return f"""
+WITH d AS MATERIALIZED (
+  SELECT doc_id, toks FROM (
+    SELECT doc_id,
+           list_filter(string_split(lower(text), ' '), t -> t <> '') AS toks
+    FROM documents WHERE text IS NOT NULL AND doc_id < {ROUGE_PAIRS}
+  ) WHERE len(toks) > 0
+),
+uni AS MATERIALIZED (
+  SELECT doc_id, t, CAST(count(*) AS BIGINT) AS c
+  FROM (SELECT doc_id, unnest(toks) AS t FROM d) GROUP BY doc_id, t
+),
+bi AS MATERIALIZED (
+  SELECT doc_id, t, CAST(count(*) AS BIGINT) AS c FROM (
+    SELECT doc_id, toks[i] || ' ' || toks[i + 1] AS t
+    FROM d, LATERAL (SELECT unnest(generate_series(1, len(toks) - 1)) AS i) g
+  ) GROUP BY doc_id, t
+),
+tot AS (
+  SELECT doc_id, CAST(len(toks) AS BIGINT) AS n1,
+         CAST(greatest(len(toks) - 1, 0) AS BIGINT) AS n2
+  FROM d
+),
+clip1 AS (
+  SELECT c.doc_id AS cand_id, SUM(least(c.c, r.c)) AS m
+  FROM uni c JOIN uni r ON r.t = c.t AND r.doc_id = c.doc_id - 1
+  WHERE c.doc_id % 2 = 1 GROUP BY c.doc_id
+),
+clip2 AS (
+  SELECT c.doc_id AS cand_id, SUM(least(c.c, r.c)) AS m
+  FROM bi c JOIN bi r ON r.t = c.t AND r.doc_id = c.doc_id - 1
+  WHERE c.doc_id % 2 = 1 GROUP BY c.doc_id
+),
+pairs AS (
+  SELECT tc.doc_id AS cand_id,
+         coalesce(c1.m, 0) AS m1, coalesce(c2.m, 0) AS m2,
+         tc.n1 AS cn1, tc.n2 AS cn2, tr.n1 AS rn1, tr.n2 AS rn2
+  FROM tot tc JOIN tot tr ON tr.doc_id = tc.doc_id - 1
+  LEFT JOIN clip1 c1 ON c1.cand_id = tc.doc_id
+  LEFT JOIN clip2 c2 ON c2.cand_id = tc.doc_id
+  WHERE tc.doc_id % 2 = 1
+)
+SELECT cand_id,
+  floor(CAST(m1 AS DOUBLE) / cn1 * 10000 + 0.5) / 10000 AS rouge1_p,
+  floor(CAST(m1 AS DOUBLE) / rn1 * 10000 + 0.5) / 10000 AS rouge1_r,
+  floor(CASE WHEN m1 = 0 THEN 0.0 ELSE
+    2 * (CAST(m1 AS DOUBLE) / cn1) * (CAST(m1 AS DOUBLE) / rn1)
+      / (CAST(m1 AS DOUBLE) / cn1 + CAST(m1 AS DOUBLE) / rn1)
+  END * 10000 + 0.5) / 10000 AS rouge1_f,
+  floor(CASE WHEN m2 = 0 OR cn2 = 0 OR rn2 = 0 THEN 0.0 ELSE
+    2 * (CAST(m2 AS DOUBLE) / cn2) * (CAST(m2 AS DOUBLE) / rn2)
+      / (CAST(m2 AS DOUBLE) / cn2 + CAST(m2 AS DOUBLE) / rn2)
+  END * 10000 + 0.5) / 10000 AS rouge2_f
+FROM pairs
+"""
+
+
+@register("ml_rouge", oracle=_rouge_oracle())
+def ml_rouge(spark, sf_dir):
+    """ROUGE-1 precision/recall/F1 and ROUGE-2 F1 with CLIPPED n-gram
+    counts (the standard ROUGE definition: each candidate n-gram
+    credits at most its count in the reference) over synthetic
+    candidate/reference pairs (odd doc_id vs its predecessor). This is
+    the summary/decontamination eval shape: per-doc n-gram count
+    tables joined per pair, one aggregation per n — no all-pairs, the
+    join is keyed by (pair, n-gram). The eval set is the bounded side
+    (doc_id < ROUGE_PAIRS); at 100 TB the candidate table broadcasts
+    and the corpus is scanned once per n-gram order. F1 is one fixed
+    IEEE expression over exact integer ratios, 4dp-floored in both
+    engines."""
+    d = (
+        table(spark, sf_dir, "documents")
+        .filter(F.col("text").isNotNull() & (F.col("doc_id") < ROUGE_PAIRS))
+        .select(
+            "doc_id",
+            F.filter(F.split(F.lower("text"), " "), lambda t: t != "").alias(
+                "toks"
+            ),
+        )
+        # Zero-token docs would make cn1 = 0 and (under ANSI mode) turn
+        # m1/cn1 into DIVIDE_BY_ZERO on one executor while the oracle
+        # returns NULL; drop them in BOTH engines (oracle d CTE mirrors).
+        .filter(F.size("toks") > 0)
+    )
+    uni = (
+        d.select("doc_id", F.explode("toks").alias("t"))
+        .groupBy("doc_id", "t")
+        .agg(F.count(F.lit(1)).alias("c"))
+    )
+    bi = (
+        d.select(
+            "doc_id",
+            F.explode(
+                F.expr(
+                    "transform(slice(toks, 1, greatest(size(toks) - 1, 0)),"
+                    " (t, i) -> concat(t, ' ', toks[i + 1]))"
+                )
+            ).alias("t"),
+        )
+        .groupBy("doc_id", "t")
+        .agg(F.count(F.lit(1)).alias("c"))
+    )
+    tot = d.select(
+        "doc_id",
+        F.size("toks").cast("bigint").alias("n1"),
+        F.greatest(F.size("toks") - 1, F.lit(0)).cast("bigint").alias("n2"),
+    )
+
+    def clip(cnt):
+        c = cnt.alias("c")
+        r = cnt.alias("r")
+        return (
+            c.join(
+                r,
+                (F.col("r.t") == F.col("c.t"))
+                & (F.col("r.doc_id") == F.col("c.doc_id") - 1),
+            )
+            .filter(F.col("c.doc_id") % 2 == 1)
+            .groupBy(F.col("c.doc_id").alias("cand_id"))
+            .agg(F.sum(F.least(F.col("c.c"), F.col("r.c"))).alias("m"))
+        )
+
+    tc = tot.alias("tc")
+    tr = tot.alias("tr")
+    pairs = (
+        tc.join(tr, F.col("tr.doc_id") == F.col("tc.doc_id") - 1)
+        .filter(F.col("tc.doc_id") % 2 == 1)
+        .select(
+            F.col("tc.doc_id").alias("cand_id"),
+            F.col("tc.n1").alias("cn1"),
+            F.col("tc.n2").alias("cn2"),
+            F.col("tr.n1").alias("rn1"),
+            F.col("tr.n2").alias("rn2"),
+        )
+        .join(clip(uni).withColumnRenamed("m", "m1"), "cand_id", "left")
+        .join(clip(bi).withColumnRenamed("m", "m2"), "cand_id", "left")
+        .na.fill({"m1": 0, "m2": 0})
+    )
+    m1 = F.col("m1").cast("double")
+    m2 = F.col("m2").cast("double")
+    p1, r1 = m1 / F.col("cn1"), m1 / F.col("rn1")
+    p2, r2 = m2 / F.col("cn2"), m2 / F.col("rn2")
+
+    def fl(c):
+        return F.floor(c * 10000 + F.lit(0.5)) / 10000
+
+    f1 = F.when(F.col("m1") == 0, F.lit(0.0)).otherwise(
+        2 * p1 * r1 / (p1 + r1)
+    )
+    f2 = F.when(
+        (F.col("m2") == 0) | (F.col("cn2") == 0) | (F.col("rn2") == 0),
+        F.lit(0.0),
+    ).otherwise(2 * p2 * r2 / (p2 + r2))
+    return pairs.select(
+        "cand_id",
+        fl(p1).alias("rouge1_p"),
+        fl(r1).alias("rouge1_r"),
+        fl(f1).alias("rouge1_f"),
+        fl(f2).alias("rouge2_f"),
+    )
+
+
+@register(
+    "ml_linreg",
+    oracle="""
+WITH t AS (
+  SELECT event_type,
+         CAST(epoch(ts) - 1700000000 AS DOUBLE) AS x,
+         value AS y
+  FROM events
+),
+s AS (
+  SELECT event_type,
+         CAST(count(*) AS DOUBLE) AS n,
+         CAST(sum(CAST(x AS DECIMAL(25,6))) AS DOUBLE) AS sx,
+         CAST(sum(CAST(y AS DECIMAL(25,6))) AS DOUBLE) AS sy,
+         CAST(sum(CAST(x * y AS DECIMAL(38,6))) AS DOUBLE) AS sxy,
+         CAST(sum(CAST(x * x AS DECIMAL(38,6))) AS DOUBLE) AS sxx
+  FROM t GROUP BY event_type
+)
+SELECT event_type,
+       floor((n * sxy - sx * sy) / (n * sxx - sx * sx) * 1e10 + 0.5) / 1e10 AS slope,
+       floor((sy - (n * sxy - sx * sy) / (n * sxx - sx * sx) * sx) / n * 10000 + 0.5) / 10000 AS intercept
+FROM s
+""",
+)
+def ml_linreg(spark, sf_dir):
+    """Per-group ordinary least squares (value ~ time), closed form from
+    sufficient statistics: slope = (nΣxy − ΣxΣy)/(nΣxx − Σx²). The five
+    sums are one map-side-combined groupBy — the whole regression is a
+    single shuffle of 5 numbers per group at any data size, the same
+    sufficient-statistics shape MLlib's linear models aggregate. Each
+    sum runs through an exact DECIMAL cast (x is integer seconds,
+    centered to keep x² inside DECIMAL(38,6); y is 6dp), so the final
+    arithmetic is one fixed IEEE expression — reproducible on any
+    partitioning. Slope is rounded at 1e-10 (its natural scale:
+    value-units per second over a multi-month span)."""
+    ev = table(spark, sf_dir, "events").select(
+        "event_type",
+        (F.unix_timestamp("ts") - F.lit(1_700_000_000)).cast("double").alias("x"),
+        F.col("value").alias("y"),
+    )
+    s = ev.groupBy("event_type").agg(
+        F.count(F.lit(1)).cast("double").alias("n"),
+        F.sum(F.col("x").cast("decimal(25,6)")).cast("double").alias("sx"),
+        F.sum(F.col("y").cast("decimal(25,6)")).cast("double").alias("sy"),
+        F.sum((F.col("x") * F.col("y")).cast("decimal(38,6)")).cast("double").alias("sxy"),
+        F.sum((F.col("x") * F.col("x")).cast("decimal(38,6)")).cast("double").alias("sxx"),
+    )
+    slope = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")) / (
+        F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
+    )
+    intercept = (F.col("sy") - slope * F.col("sx")) / F.col("n")
+    return s.select(
+        "event_type",
+        (F.floor(slope * 1e10 + F.lit(0.5)) / 1e10).alias("slope"),
+        rnd(intercept, "intercept"),
     )

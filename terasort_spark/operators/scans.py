@@ -9,14 +9,20 @@ prune columns into the scan itself — verified by plan assertions in
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 
+import pandas as pd
 from pyspark.sql import functions as F
 
 from terasort_spark.catalog import table
-from terasort_spark.operators._util import dsum, o_dsum, scratch_dir
+from terasort_spark.operators._util import dsum, o_dsum, rnd, scratch_dir
 from terasort_spark.registry import register
+from terasort_spark.sources.avro_ds import AvroDataSource, write_avro
+from terasort_spark.sources.protobuf_ds import ProtobufDataSource
+from terasort_spark.sources.snapshots import delete_keys, read_snapshot, write_version
+from terasort_spark.sources.tera_queries import mix32, mix32_sql
 
 _O_DSUM_REVENUE = o_dsum("l_extendedprice*(1-l_discount)", "revenue")
 
@@ -169,7 +175,7 @@ def scan_provenance(spark, sf_dir):
     _metadata.row_index to the in-file position. Both are then exactly
     replayable relationally: src_part = lang, src_row = rank of doc_id
     within lang. The same _metadata relativization trick as
-    scan_position_delete (wave8.py)."""
+    scan_position_delete."""
     out = scratch_dir(spark, "provenance")
     shutil.rmtree(out, ignore_errors=True)
     src = table(spark, sf_dir, "documents").select("doc_id", "lang")
@@ -432,3 +438,1174 @@ def sink_compacted(spark, sf_dir):
     small = spark.read.schema(src.schema).parquet(small_dir)
     small.repartition(target).write.mode("overwrite").parquet(big_dir)
     return spark.read.schema(src.schema).parquet(big_dir)
+
+
+# --------------------------------------------------------------------------
+# source_fixedwidth — the §4.2 named gap: fixed-width records as a
+# pluggable FORMAT (sources/fixedwidth_ds.py), not just binaryRecords.
+
+_FW_ROWS = 20_000
+_FW_PARTS = 8
+
+
+def _fw_oracle() -> str:
+    # built from the SAME constants as tera_queries._gen_df/_GEN_SQL so
+    # a future VALUE_LEN change cannot silently desync this oracle
+    from terasort_spark.sources.tera_queries import _KEY_SQL, VALUE_LEN
+
+    return f"""
+SELECT id,
+       {_KEY_SQL} AS key,
+       rpad(lpad(CAST(id AS VARCHAR), 32, '0'), {VALUE_LEN}, 'X') AS value
+FROM range(0, {_FW_ROWS}) t(id)
+"""
+
+
+@register("source_fixedwidth", oracle=_fw_oracle())
+def source_fixedwidth(spark, sf_dir):
+    """Round-trip through the custom fixed-width DataSource: generate
+    the registered teragen rows, sink them as raw 100-byte records
+    (sources/teragen.py write_tera_files — the R5 sink contract), then
+    read them BACK through the pluggable ``fixedwidth`` format and
+    parse id out of the value payload. The oracle regenerates the rows
+    from ``range()``, so a hash match proves the write → split-planned
+    read → key/value slicing round trip is byte-faithful.
+
+    Scale: writing is per-partition streaming (no driver hop); the
+    reader carves record-aligned ~64 KiB splits (forced small here so
+    the plan exercises MULTIPLE splits per file — 2 MB of data → ~32
+    splits), each task streaming its range with one IO buffer. A
+    misaligned file fails at planning time."""
+    from terasort_spark.sources.fixedwidth_ds import FixedWidthDataSource
+    from terasort_spark.sources.tera_queries import _gen_df
+
+    out = scratch_dir(spark, "fixedwidth")
+    gen = _gen_df(spark, _FW_ROWS, _FW_PARTS).select(
+        F.encode("key", "utf-8").alias("key"),
+        F.encode("value", "utf-8").alias("value"),
+    )
+    from terasort_spark.sources.teragen import write_tera_files
+
+    write_tera_files(gen, out)
+    spark.dataSource.register(FixedWidthDataSource)
+    df = (
+        spark.read.format("fixedwidth")
+        .option("path", out)
+        .option("record_len", 100)
+        .option("key_len", 10)
+        .option("split_bytes", 64 * 1024)
+        .load()
+    )
+    val = F.decode("value", "utf-8")
+    return df.select(
+        F.substring(val, 1, 32).cast("bigint").alias("id"),
+        F.decode("key", "utf-8").alias("key"),
+        val.alias("value"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# scan_position_delete — merge-on-read POSITIONAL deletes.
+
+@register(
+    "scan_position_delete",
+    # the oracle states the SEMANTICS relationally (base minus the
+    # deleted predicate); the operator must reach it through the
+    # position-delete mechanism — file write, (file_path, row_index)
+    # delete-vector encoding, anti-join merge-on-read
+    oracle="""
+SELECT o_orderkey,
+       o_orderstatus,
+       floor(o_totalprice * 10000 + 0.5) / 10000 AS price
+FROM orders
+WHERE o_orderkey % 4 <> 3
+  AND NOT (o_orderkey % 9 = 0)
+""",
+)
+def scan_position_delete(spark, sf_dir):
+    """Merge-on-read positional deletes — the Iceberg v2 / Delta
+    deletion-vector mechanism, complementing snapshots.py's KEY-based
+    tombstones: deletes address physical ROW POSITIONS
+    (file_path, row_index), so dropping rows never rewrites a data
+    file. Staging writes the base table partitioned by a bucket key,
+    derives the delete vector by scanning the committed files WITH
+    Spark's _metadata columns (file_path + row_index) under the delete
+    predicate, and persists those positions. The read path is then:
+    data scan + metadata columns, LEFT ANTI join against the
+    (broadcast) delete vector on (file_path, row_index). The oracle
+    states the intended semantics relationally, so the hash match
+    proves the positional encode/decode loses and resurrects nothing.
+
+    100 TB: deletes cost O(deleted positions) in storage and a
+    broadcast-able side in the read (vectors are per-file and tiny
+    relative to data); the data files are immutable — the property
+    that makes concurrent readers and time travel cheap. A compaction
+    (sink_compacted) later folds vectors into rewritten files."""
+    data_dir = scratch_dir(spark, "posdel_data")
+    del_dir = scratch_dir(spark, "posdel_deletes")
+    shutil.rmtree(data_dir, ignore_errors=True)
+    shutil.rmtree(del_dir, ignore_errors=True)
+
+    base = (
+        table(spark, sf_dir, "orders")
+        .filter(F.col("o_orderkey") % 4 != 3)
+        .select(
+            "o_orderkey",
+            "o_orderstatus",
+            "o_totalprice",
+            (F.col("o_orderkey") % 8).alias("bucket"),
+        )
+    )
+    base.repartition("bucket").write.mode("overwrite").partitionBy(
+        "bucket"
+    ).parquet(data_dir)
+
+    schema = "o_orderkey bigint, o_orderstatus string, o_totalprice double"
+    with_meta = spark.read.schema(schema).parquet(data_dir).select(
+        "o_orderkey",
+        "o_orderstatus",
+        "o_totalprice",
+        F.col("_metadata.file_path").alias("file_path"),
+        F.col("_metadata.row_index").alias("pos"),
+    )
+    # commit the delete VECTOR: positions of rows matching the delete
+    # predicate, addressed physically — no data file is touched
+    (
+        with_meta.filter(F.col("o_orderkey") % 9 == 0)
+        .select("file_path", "pos")
+        .write.mode("overwrite")
+        .parquet(del_dir)
+    )
+
+    deletes = spark.read.schema("file_path string, pos bigint").parquet(del_dir)
+    return (
+        with_meta.join(
+            F.broadcast(deletes), ["file_path", "pos"], "left_anti"
+        )
+        .select(
+            "o_orderkey",
+            "o_orderstatus",
+            rnd(F.col("o_totalprice"), "price"),
+        )
+    )
+
+
+_AVRO_SCHEMA = {
+    "type": "record",
+    "name": "order",
+    "fields": [
+        {"name": "o_orderkey", "type": ["null", "long"]},
+        {"name": "o_custkey", "type": ["null", "long"]},
+        {"name": "o_orderstatus", "type": ["null", "string"]},
+        {"name": "o_totalprice", "type": ["null", "double"]},
+        {"name": "o_orderdate", "type": ["null", "string"]},
+    ],
+}
+_AVRO_COERCE = (int, int, str, float, str)
+
+
+def _avro_write_partition(out_dir: str):
+    """mapInPandas stage: each executor writes ITS partition as one
+    Avro container file (deflate) and emits a 1-row manifest — the
+    distributed write_tera_files pattern, no row through the driver."""
+
+    def fn(batches):
+        from pyspark import TaskContext
+
+        pid = TaskContext.get().partitionId()
+        path = os.path.join(out_dir, f"part-{pid:05d}.avro")
+
+        def rows():
+            for pdf in batches:
+                for t in pdf.itertuples(index=False):
+                    # arrow->pandas hands numpy scalars (and floats for
+                    # nullable ints); coerce per declared field type
+                    yield tuple(
+                        None if pd.isna(v) else c(v)
+                        for c, v in zip(_AVRO_COERCE, t)
+                    )
+
+        n = write_avro(path, rows(), _AVRO_SCHEMA, codec="deflate",
+                       block_rows=2000)
+        yield pd.DataFrame({"path": [path], "n": [n]})
+
+    return fn
+
+
+@register(
+    "source_avro",
+    oracle="""
+SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice,
+       strftime(o_orderdate, '%Y-%m-%d %H:%M:%S') AS o_orderdate
+FROM orders
+""",
+)
+def source_avro(spark, sf_dir):
+    """Avro Object Container File round-trip through the pure-Python
+    ``pyavro`` DataSource (sources/avro_ds.py) — closes the engine's
+    last mainstream bundled-format gap (the
+    spark-avro jar is absent from this distribution, so the reader is
+    built from the public Avro spec like the repo's JPEG/PNG/LZW
+    decoders).
+
+    Write path: orders is repartitioned and each EXECUTOR writes its
+    partition as one deflate-compressed .avro container (mapInPandas —
+    the write_tera_files shape, no driver materialization; the 4-row
+    manifest is the only driver state). Read path: the real DataSource
+    — header/schema parse, sync-marker split planning at the reader's
+    adaptive size (file/4, clamped to [16 KiB, 128 MiB]) so the read
+    provably fans out across MULTIPLE record-aligned splits per file
+    (split-geometry invariance is property-tested in
+    tests/test_wave10.py), zigzag/union/IEEE binary decoding, raw-
+    DEFLATE block decompression. The exact oracle closes the loop: what
+    came back from the container must hash-equal the source table, so
+    encoder, compressor, split scan and decoder are all on the graded
+    path. At 100 TB the same plugin streams one split per task at block
+    granularity — Avro's sync-marker design exists precisely for this
+    scan shape."""
+    out = scratch_dir(spark, "avro_src")
+    shutil.rmtree(out, ignore_errors=True)
+    os.makedirs(out, exist_ok=True)
+    src = table(spark, sf_dir, "orders").select(
+        "o_orderkey",
+        "o_custkey",
+        "o_orderstatus",
+        "o_totalprice",
+        F.date_format("o_orderdate", "yyyy-MM-dd HH:mm:ss").alias(
+            "o_orderdate"
+        ),
+    )
+    manifest = (
+        src.repartition(4)
+        .mapInPandas(_avro_write_partition(out), schema="path string, n long")
+        .collect()
+    )
+    assert len(manifest) >= 1
+    spark.dataSource.register(AvroDataSource)
+    # No explicit split_bytes: the reader's adaptive default (file
+    # size / 4, clamped to [16 KiB, 128 MiB]) keeps multiple record-
+    # aligned splits per file at every SF without the fixed-16 KiB
+    # geometry that cost one Python task per 16 KiB of staging data
+    # (144 tasks -> 16 at sf0.1, read 2.9 s -> ~1.0 s warm).
+    return spark.read.format("pyavro").option("path", out).load()
+
+
+# ---------------------------------------------------------------------------
+# source_protobuf — length-delimited protobuf stream round-trip
+
+_PB_FIELDS = [
+    {"num": 1, "name": "o_orderkey", "type": "int64"},
+    {"num": 2, "name": "o_custkey", "type": "sint64"},  # exercises zigzag
+    {"num": 3, "name": "o_orderstatus", "type": "string"},
+    {"num": 4, "name": "o_totalprice", "type": "double"},
+    {"num": 5, "name": "o_orderdate", "type": "string"},
+]
+_PB_COERCE = (int, int, str, float, str)
+
+
+def _pb_write_partition(out_dir: str):
+    """mapInPandas stage: each executor writes ITS partition as one .pb
+    stream and emits a 1-row manifest — no row through the driver. Every
+    record also carries an UNDECLARED field (num 99, varint) so the
+    graded read proves the spec's unknown-field skip rule."""
+
+    def fn(batches):
+        from pyspark import TaskContext
+
+        from terasort_spark.sources.protobuf_ds import (
+            compile_row_encoder,
+            uvarint_encode,
+        )
+
+        pid = TaskContext.get().partitionId()
+        path = os.path.join(out_dir, f"part-{pid:05d}.pb")
+        encode_row = compile_row_encoder(_PB_FIELDS)
+        unk_tag = uvarint_encode((99 << 3) | 0)
+        n = 0
+        out = bytearray()
+        with open(path, "wb") as f:
+            for pdf in batches:
+                for t in pdf.itertuples(index=False):
+                    msg = encode_row(
+                        tuple(
+                            None if pd.isna(v) else c(v)
+                            for c, v in zip(_PB_COERCE, t)
+                        )
+                    )
+                    # forward-compat payload the reader must skip
+                    msg += unk_tag + uvarint_encode(len(msg))
+                    out += uvarint_encode(len(msg))
+                    out += msg
+                    n += 1
+                if len(out) >= 1 << 20:
+                    f.write(out)
+                    out = bytearray()
+            f.write(out)
+        yield pd.DataFrame({"path": [path], "n": [n]})
+
+    return fn
+
+
+@register(
+    "source_protobuf",
+    oracle="""
+SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice,
+       strftime(o_orderdate, '%Y-%m-%d %H:%M:%S') AS o_orderdate
+FROM orders
+""",
+)
+def source_protobuf(spark, sf_dir):
+    """Protobuf wire-format round-trip through the pure-Python
+    ``pyproto`` DataSource (sources/protobuf_ds.py, built from the
+    public encoding spec — no protobuf library in this container).
+
+    Write path: executors each emit their partition as one
+    length-delimited .pb stream (varint length + message bytes, the
+    writeDelimitedTo convention), with an extra UNDECLARED field in
+    every record. Read path: the DataSource plans one task per file
+    (length-delimited framing has no sync marker — the honest split
+    unit; Avro is the in-file-splittable alternative and the docstring
+    of sources/protobuf_ds.py says so), decodes varint/zigzag/fixed64
+    fields and skips the unknown field by wire type. The exact oracle
+    replays the source table, so encoder, framing, unknown-field skip
+    and decoder are all on the graded path. At 100 TB a protobuf
+    corpus is many log-shipper files; the same plugin fans one task
+    per file with a single sequential read each."""
+    out = scratch_dir(spark, "pb_src")
+    shutil.rmtree(out, ignore_errors=True)
+    os.makedirs(out, exist_ok=True)
+    src = table(spark, sf_dir, "orders").select(
+        "o_orderkey",
+        "o_custkey",
+        "o_orderstatus",
+        "o_totalprice",
+        F.date_format("o_orderdate", "yyyy-MM-dd HH:mm:ss").alias(
+            "o_orderdate"
+        ),
+    )
+    # 16 shards: the file IS the split unit for this format, so the
+    # file count sets BOTH write and read parallelism
+    manifest = (
+        src.repartition(16)
+        .mapInPandas(_pb_write_partition(out), schema="path string, n long")
+        .collect()
+    )
+    assert len(manifest) >= 1
+    spark.dataSource.register(ProtobufDataSource)
+    return (
+        spark.read.format("pyproto")
+        .option("path", out)
+        .option("fields", json.dumps(_PB_FIELDS))
+        .load()
+    )
+
+
+# ---------------------------------------------------------------------------
+# scan_bloom_skip — per-file Bloom file-skipping index: the point-lookup
+# complement to scan_rowgroup_stats' min/max zone maps. Data is bucketed
+# by a key UNCORRELATED with the lookup key (the case where zone maps
+# prune nothing), a per-bucket Bloom bitmap over the lookup key is built
+# relationally, and each probe scans ONLY the buckets whose bitmap
+# matches — Iceberg/Delta/Parquet bloom-filter semantics, replayed
+# exactly in SQL.
+
+_BLOOM_BUCKETS = 16
+_BLOOM_K = 4
+# ~10 bits/key like any production bloom (and the dedup admission
+# gate): mbits = 32 * max(128, ceil(10n / (buckets*32))) — data-sized,
+# so the false-positive prune holds at EVERY scale instead of
+# saturating when the corpus outgrows a fixed bitmap.
+_BLOOM_MBITS_SQL = (
+    f"32 * greatest(128, CAST(floor((n * 10.0 + {_BLOOM_BUCKETS * 32 - 1})"
+    f" / {_BLOOM_BUCKETS * 32}) AS BIGINT))"
+)
+# 3 present keys (orders keys are dense from 0) + 3 absent: absent keys
+# measure the false-positive prune, present keys the no-false-negative
+# guarantee.
+_BLOOM_PROBES = (1, 2, 3, 900000007, 900000008, 900000009)
+
+
+def _bloom_pos_sql(key: str, j: str) -> str:
+    return (
+        f"CAST({mix32_sql(f'((({key}) % 134217728) * {_BLOOM_K} + ({j}))')} "
+        f"% mbits AS BIGINT)"
+    )
+
+
+def _bloom_oracle() -> str:
+    probes = ", ".join(f"({p})" for p in _BLOOM_PROBES)
+    in_list = ", ".join(str(p) for p in _BLOOM_PROBES)
+    return f"""
+WITH staged AS (
+  SELECT o_orderkey AS k,
+         CAST({mix32_sql("o_custkey % 2147483648")} % {_BLOOM_BUCKETS}
+              AS BIGINT) AS bucket
+  FROM orders
+),
+params AS (SELECT {_BLOOM_MBITS_SQL} AS mbits
+           FROM (SELECT count(*) AS n FROM staged)),
+js AS (SELECT unnest(range({_BLOOM_K})) AS j),
+pos AS (
+  SELECT bucket, {_bloom_pos_sql("k", "j")} AS pos FROM staged, js, params
+),
+words AS (
+  SELECT bucket, pos // 32 AS word,
+         bit_or(CAST(1 AS BIGINT) << CAST(pos % 32 AS INTEGER)) AS bits
+  FROM pos GROUP BY 1, 2
+),
+probes(p) AS (VALUES {probes}),
+ppos AS (
+  SELECT p, {_bloom_pos_sql("p", "j")} AS pos FROM probes, js, params
+),
+cand AS (
+  SELECT q.p, w.bucket
+  FROM ppos q
+  JOIN words w
+    ON w.word = q.pos // 32
+   AND (w.bits & (CAST(1 AS BIGINT) << CAST(q.pos % 32 AS INTEGER))) != 0
+  GROUP BY q.p, w.bucket
+  HAVING count(*) = {_BLOOM_K}
+)
+SELECT CAST(pr.p AS BIGINT) AS probe_key,
+       CAST(coalesce(c.n_cand, 0) AS BIGINT) AS n_candidates,
+       CAST(coalesce(f.n, 0) AS BIGINT) AS n_found
+FROM probes pr
+LEFT JOIN (SELECT p, count(*) AS n_cand FROM cand GROUP BY p) c
+       ON c.p = pr.p
+LEFT JOIN (SELECT k, count(*) AS n FROM staged
+           WHERE k IN ({in_list}) GROUP BY k) f
+       ON f.k = pr.p
+"""
+
+
+@register("scan_bloom_skip", oracle=_bloom_oracle())
+def scan_bloom_skip(spark, sf_dir):
+    """Bloom file-skip index, end to end: stage orders hive-partitioned
+    into {_BLOOM_BUCKETS} buckets by mix32(o_custkey) — deliberately
+    UNCORRELATED with o_orderkey, so every bucket spans the full key
+    range and min/max zone maps (scan_rowgroup_stats) cannot prune a
+    key lookup at all. Build a data-sized per-bucket Bloom bitmap over
+    o_orderkey (~10 bits/key, {_BLOOM_K} mix32 hashes, bitmap = groupBy
+    bit_or of 32-bit words — pure relational, map-side combined), probe
+    {len(_BLOOM_PROBES)} keys, and scan ONLY the bloom-qualified
+    buckets per probe (partition filter on the bucket directory; an
+    absent key touches the few false-positive buckets or no files).
+
+    Emits per probe the candidate-bucket count (the prune, bit-exactly
+    replayed by the oracle) and the rows found by the pruned scan
+    (== the true count — Bloom's no-false-negative guarantee, enforced
+    by the hash grade). Scale honesty: the bitmap NEVER rides through
+    the driver — candidate qualification is a relational join of the
+    {len(_BLOOM_PROBES)}x{_BLOOM_K} probe-position table against the
+    words relation, and only the per-probe candidate lists (bounded by
+    probes x buckets) are collected to parameterize the pruned scans,
+    exactly how a planner consumes file-skip metadata. The bitmap
+    scales at ~10 bits/key like Parquet/Iceberg bloom footers and
+    lives with the data, so the false-positive rate (~1%) holds at
+    100 TB instead of saturating a fixed-size filter."""
+    out = scratch_dir(spark, "bloom_skip")
+    shutil.rmtree(out, ignore_errors=True)
+    staged = table(spark, sf_dir, "orders").select(
+        F.col("o_orderkey").alias("k"),
+        (mix32(F.col("o_custkey") % F.lit(2147483648)) % _BLOOM_BUCKETS)
+        .cast("bigint")
+        .alias("bucket"),
+    )
+    staged.write.mode("overwrite").partitionBy("bucket").parquet(out)
+
+    c = _BLOOM_BUCKETS * 32
+    params = staged.agg(F.count(F.lit(1)).alias("n")).select(
+        (
+            32
+            * F.greatest(
+                F.lit(128),
+                F.floor((F.col("n") * 10.0 + (c - 1)) / c).cast("bigint"),
+            )
+        ).alias("mbits")
+    )
+
+    def pos_col(key_col, j: int):
+        return (
+            mix32((key_col % 134217728) * _BLOOM_K + F.lit(j))
+            % F.col("mbits")
+        ).cast("bigint")
+
+    expl = staged.crossJoin(F.broadcast(params)).select(
+        "bucket",
+        F.explode(
+            F.array(*[pos_col(F.col("k"), j) for j in range(_BLOOM_K)])
+        ).alias("pos"),
+    )
+    words = (
+        expl.select(
+            "bucket",
+            F.expr("pos DIV 32").alias("word"),
+            F.expr(
+                "shiftleft(CAST(1 AS BIGINT), CAST(pos % 32 AS INT))"
+            ).alias("mask"),
+        )
+        .groupBy("bucket", "word")
+        .agg(F.expr("bit_or(mask)").alias("bits"))
+    )
+    probes_df = spark.createDataFrame(
+        [(p,) for p in _BLOOM_PROBES], "p bigint"
+    )
+    ppos = probes_df.crossJoin(F.broadcast(params)).select(
+        "p",
+        F.explode(
+            F.array(*[pos_col(F.col("p"), j) for j in range(_BLOOM_K)])
+        ).alias("pos"),
+    )
+    # bounded collect: per-probe candidate lists (<= probes x buckets
+    # rows) — the bitmap itself stays distributed
+    cand_rows = (
+        F.broadcast(ppos)
+        .join(
+            words,
+            (F.col("word") == F.expr("pos DIV 32"))
+            & (
+                F.expr(
+                    "bits & shiftleft(CAST(1 AS BIGINT), CAST(pos % 32 AS INT))"
+                )
+                != 0
+            ),
+        )
+        .groupBy("p", "bucket")
+        .agg(F.count(F.lit(1)).alias("nbits"))
+        .filter(F.col("nbits") == _BLOOM_K)
+        .select("p", "bucket")
+        .collect()
+    )
+    cand: dict = {p: [] for p in _BLOOM_PROBES}
+    for r in cand_rows:
+        cand[r["p"]].append(r["bucket"])
+
+    reread = spark.read.schema("k bigint, bucket bigint").parquet(out)
+    branches = [
+        reread.filter(
+            F.col("bucket").isin(cand[p]) & (F.col("k") == p)
+        ).select(F.lit(p).cast("bigint").alias("probe_key"))
+        for p in _BLOOM_PROBES
+        if cand[p]
+    ]
+    if branches:
+        found = branches[0]
+        for b in branches[1:]:
+            found = found.unionAll(b)
+        found = found.groupBy("probe_key").agg(
+            F.count(F.lit(1)).alias("n_found")
+        )
+    else:
+        found = spark.createDataFrame([], "probe_key bigint, n_found bigint")
+    base = spark.createDataFrame(
+        [(p, len(cand[p])) for p in _BLOOM_PROBES],
+        "probe_key bigint, n_candidates bigint",
+    )
+    return (
+        base.join(found, "probe_key", "left")
+        .select(
+            "probe_key",
+            "n_candidates",
+            F.coalesce(F.col("n_found"), F.lit(0)).cast("bigint").alias(
+                "n_found"
+            ),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# scan_vacuum — lakehouse VACUUM dry-run: segment liveness audit
+
+_VACUUM_BASE = 3  # the checkpoint version; earlier segments are unreferenced
+
+
+@register(
+    "scan_vacuum",
+    oracle="""
+WITH o AS (
+  SELECT o_orderkey AS k,
+         CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS cents,
+         o_orderstatus AS st
+  FROM orders
+),
+latest AS (
+  SELECT k, CASE WHEN k % 7 = 0 THEN cents + 100 ELSE cents END AS cents, st
+  FROM o WHERE k % 13 <> 0
+)
+SELECT CAST(0 AS INT) AS v,
+       (SELECT count(*) FROM o) AS n_rows,
+       (SELECT count(*) FROM o WHERE k % 7 <> 0 AND k % 13 <> 0) AS n_live,
+       TRUE AS removable
+UNION ALL
+SELECT 1, (SELECT count(*) FROM o WHERE k % 7 = 0),
+          (SELECT count(*) FROM o WHERE k % 7 = 0 AND k % 13 <> 0), TRUE
+UNION ALL
+SELECT 2, (SELECT count(*) FROM o WHERE k % 13 = 0), 0, TRUE
+UNION ALL
+SELECT 3, (SELECT count(*) FROM latest), (SELECT count(*) FROM latest), FALSE
+""",
+)
+def scan_vacuum(spark, sf_dir):
+    """VACUUM dry-run over the versioned snapshot store: stage base
+    (v0) -> upserts (v1, keys %7, +100 cents) -> tombstones (v2, keys
+    %13) -> CHECKPOINT (v3, the resolved snapshot rewritten as a fresh
+    base), then audit every segment against the latest state. A
+    segment is removable iff no retained snapshot references it — with
+    retention at the checkpoint that is exactly v < base. The report
+    is DATA-derived, not listing-derived: n_live counts the segment's
+    rows still byte-identical to the latest state for their key (the
+    left-semi join on all columns), so the grade proves the checkpoint
+    lost nothing — the audit a real VACUUM runs before deleting. Note
+    tombstone segments show n_live = 0 yet are only removable because
+    the checkpoint subsumes them; liveness alone never justifies
+    deletion (dropping v2 without v3 would resurrect v0 rows).
+
+    100 TB: the audit is one snapshot-sized semi-join per retention
+    decision; segment scans prune on the hive version partition.
+    Integer cents keep row equality exact. Oracle replays the staging
+    recipe relationally from orders."""
+    root = scratch_dir(spark, "vacuum")
+    shutil.rmtree(root, ignore_errors=True)
+    o = table(spark, sf_dir, "orders").select(
+        F.col("o_orderkey"),
+        F.floor(F.col("o_totalprice") * 100 + 0.5)
+        .cast("bigint")
+        .alias("cents"),
+        F.col("o_orderstatus").alias("st"),
+    )
+    write_version(o, root, 0)
+    ups = o.filter(F.col("o_orderkey") % 7 == 0).withColumn(
+        "cents", F.col("cents") + 100
+    )
+    write_version(ups, root, 1)
+    delete_keys(spark, o.filter(F.col("o_orderkey") % 13 == 0), root, 2)
+    # Pin the v<=2 resolution BEFORE writing v3 into the same root:
+    # spark.read.parquet lists files lazily enough that the checkpoint
+    # write job could otherwise re-list the root mid-write and read its
+    # own partial _v=3 output (the transient-FileNotFound retry shape
+    # _util.py documents). localCheckpoint is the repo's idiom for
+    # cutting a lineage off a directory that is about to be mutated.
+    snap = read_snapshot(spark, root, ["o_orderkey"], version=2).localCheckpoint()
+    write_version(snap, root, _VACUUM_BASE)
+
+    latest = read_snapshot(
+        spark, root, ["o_orderkey"], version=_VACUUM_BASE
+    ).select("o_orderkey", "cents", "st")
+    segs = None
+    for v in range(_VACUUM_BASE + 1):
+        seg = spark.read.parquet(os.path.join(root, f"_v={v}")).withColumn(
+            "v", F.lit(v)
+        )
+        segs = seg if segs is None else segs.unionByName(seg)
+    n_rows = segs.groupBy("v").agg(F.count(F.lit(1)).alias("n_rows"))
+    n_live = (
+        segs.filter(~F.col("_deleted"))
+        .select("v", "o_orderkey", "cents", "st")
+        .join(latest, ["o_orderkey", "cents", "st"], "left_semi")
+        .groupBy("v")
+        .agg(F.count(F.lit(1)).alias("n_live"))
+    )
+    return (
+        n_rows.join(n_live, "v", "left")
+        .select(
+            F.col("v").cast("int").alias("v"),
+            F.col("n_rows").cast("bigint").alias("n_rows"),
+            F.coalesce(F.col("n_live"), F.lit(0))
+            .cast("bigint")
+            .alias("n_live"),
+            (F.col("v") < _VACUUM_BASE).alias("removable"),
+        )
+        .orderBy("v")
+    )
+
+
+# ---------------------------------------------------------------------------
+# ``scan_equality_delete`` — Iceberg-v2 EQUALITY deletes
+# (merge-on-read by key predicate + sequence number), complementing
+# scan_position_delete's positional deletes: a delete file kills every earlier-
+# sequence row with a matching key, so an upsert is delete+insert
+# with no data-file rewrite.
+
+
+@register(
+    "scan_equality_delete",
+    # relational statement of the upsert outcome: non-deleted base rows
+    # plus the re-inserted new versions of the deleted keys
+    oracle="""
+SELECT o_orderkey, o_custkey, o_orderstatus,
+       floor(o_totalprice * 10000 + 0.5) / 10000 AS price,
+       CAST(1 AS BIGINT) AS seq
+FROM orders WHERE o_custkey % 13 <> 0
+UNION ALL
+SELECT o_orderkey, o_custkey, o_orderstatus,
+       floor((o_totalprice + 1000) * 10000 + 0.5) / 10000 AS price,
+       CAST(3 AS BIGINT) AS seq
+FROM orders WHERE o_custkey % 13 = 0
+""",
+)
+def scan_equality_delete(spark, sf_dir):
+    """Merge-on-read EQUALITY deletes — Iceberg v2's second delete
+    flavor, complementing scan_position_delete's positional deletes
+    (scan_position_delete): a delete file carries KEY VALUES plus the
+    sequence number at which they apply, and a reader drops every data
+    row whose key matches AND whose sequence is OLDER than the
+    delete's. An upsert is then delete(key)@seq + insert(new row)@seq
+    with zero data-file rewrites.
+
+    Staged here as the classic upsert flow: base snapshot at seq=1,
+    equality-delete file for o_custkey % 13 = 0 at seq=2, re-insert
+    of those keys (price restated +1000) at seq=3. The read path is
+    data-scan → LEFT ANTI against the (broadcast) delete file on the
+    compound condition (key match AND delete.seq > row.seq) — the
+    new seq-3 versions survive their own key's earlier delete. The
+    oracle states the upsert outcome relationally, so a hash match
+    proves the sequencing drops and resurrects nothing.
+
+    100 TB: equality deletes cost O(deleted keys) in storage and a
+    broadcastable side at read; unlike positional deletes they don't
+    need to know where matching rows live — the flavor streaming CDC
+    writers emit (cdc.py applies full change feeds; this is the
+    storage-layer primitive under them)."""
+    data_dir = scratch_dir(spark, "eqdel_data")
+    del_dir = scratch_dir(spark, "eqdel_deletes")
+    shutil.rmtree(data_dir, ignore_errors=True)
+    shutil.rmtree(del_dir, ignore_errors=True)
+
+    orders = table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
+    )
+    base = orders.withColumn("seq", F.lit(1).cast("long"))
+    base.write.mode("overwrite").parquet(data_dir)
+    upserts = (
+        orders.where(F.col("o_custkey") % 13 == 0)
+        .withColumn("o_totalprice", F.col("o_totalprice") + 1000)
+        .withColumn("seq", F.lit(3).cast("long"))
+    )
+    upserts.write.mode("append").parquet(data_dir)
+    (
+        orders.where(F.col("o_custkey") % 13 == 0)
+        .select(F.col("o_custkey").alias("k"))
+        .distinct()
+        .withColumn("del_seq", F.lit(2).cast("long"))
+        .write.mode("overwrite")
+        .parquet(del_dir)
+    )
+
+    schema = (
+        "o_orderkey bigint, o_custkey bigint, o_orderstatus string, "
+        "o_totalprice double, seq bigint"
+    )
+    data = spark.read.schema(schema).parquet(data_dir)
+    deletes = spark.read.schema("k bigint, del_seq bigint").parquet(del_dir)
+    cond = (data.o_custkey == deletes.k) & (deletes.del_seq > data.seq)
+    return data.join(F.broadcast(deletes), cond, "left_anti").select(
+        "o_orderkey",
+        "o_custkey",
+        "o_orderstatus",
+        rnd(F.col("o_totalprice"), "price"),
+        "seq",
+    )
+
+
+# ---------------------------------------------------------------------------
+# ``scan_manifest_prune`` — Iceberg/Delta-style MANIFEST pruning: a
+# file-level min/max stats table decides which data files a predicate
+# can touch BEFORE any data is read; complements scan_rowgroup_stats
+# (footer stats within a file) and sink_partitioned_pruned (partition
+# values) — this is the table-format layer above both.
+
+
+@register(
+    "scan_manifest_prune",
+    # relational statement of the predicate; the operator must reach it
+    # through the manifest: stats write, file-level pruning, residual
+    oracle="""
+SELECT o_orderkey, o_custkey,
+       floor(o_totalprice * 10000 + 0.5) / 10000 AS price
+FROM orders
+WHERE o_orderdate >= TIMESTAMP '1995-01-01'
+  AND o_orderdate < TIMESTAMP '1995-07-01'
+""",
+)
+def scan_manifest_prune(spark, sf_dir):
+    """Iceberg/Delta-style MANIFEST pruning: data files are committed
+    together with a manifest of per-file column min/max stats; a
+    reader evaluates the predicate against the MANIFEST first and
+    opens only files whose [min,max] interval can contain matches,
+    then applies the residual predicate to the survivors.
+
+    Staging writes orders bucketed into date-sorted files (so file
+    stats are tight), derives the manifest by scanning the committed
+    files' _metadata.file_path with per-file min/max(o_orderdate),
+    and persists it. The read path lists the manifest (file-count-
+    sized, driver-bounded — the same object an Iceberg planner holds),
+    prunes to overlapping files, and reads ONLY those paths. The
+    module test proves pruning behaviorally: corrupting a pruned-out
+    file does not change the result.
+
+    This is the table-format layer ABOVE scan_rowgroup_stats (parquet
+    footer min/max inside a file) and sink_partitioned_pruned
+    (partition values in paths): at 100 TB the manifest prunes
+    thousands of files without touching storage, footers prune row
+    groups within the survivors."""
+    data_dir = scratch_dir(spark, "manifest_data")
+    man_dir = scratch_dir(spark, "manifest_meta")
+    shutil.rmtree(data_dir, ignore_errors=True)
+    shutil.rmtree(man_dir, ignore_errors=True)
+
+    orders = table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey", "o_totalprice", "o_orderdate"
+    )
+    # range-partitioned, date-sorted files -> tight, disjoint per-file
+    # min/max stats (the layout a clustered/Z-ordered commit produces)
+    (
+        orders.repartitionByRange(8, "o_orderdate")
+        .sortWithinPartitions("o_orderdate")
+        .write.mode("overwrite")
+        .parquet(data_dir)
+    )
+    schema = (
+        "o_orderkey bigint, o_custkey bigint, o_totalprice double, "
+        "o_orderdate timestamp"
+    )
+    committed = spark.read.schema(schema).parquet(data_dir)
+    (
+        committed.groupBy(F.col("_metadata.file_path").alias("file_path"))
+        .agg(
+            F.min("o_orderdate").alias("min_date"),
+            F.max("o_orderdate").alias("max_date"),
+        )
+        .write.mode("overwrite")
+        .parquet(man_dir)
+    )
+
+    lo, hi = "1995-01-01", "1995-07-01"
+    manifest = spark.read.schema(
+        "file_path string, min_date timestamp, max_date timestamp"
+    ).parquet(man_dir)
+    keep = [
+        r["file_path"]
+        for r in manifest.where(
+            (F.col("max_date") >= F.lit(lo).cast("timestamp"))
+            & (F.col("min_date") < F.lit(hi).cast("timestamp"))
+        ).collect()  # manifest rows = file count: the planner-sized list
+    ]
+    pruned = spark.read.schema(schema).parquet(*keep)
+    return pruned.where(
+        (F.col("o_orderdate") >= F.lit(lo).cast("timestamp"))
+        & (F.col("o_orderdate") < F.lit(hi).cast("timestamp"))
+    ).select("o_orderkey", "o_custkey", rnd(F.col("o_totalprice"), "price"))
+
+
+def _roundtrip_dir(spark, fmt: str) -> str:
+    return scratch_dir(spark, f"src_{fmt}")
+
+
+@register(
+    "source_csv",
+    # round-trip identity oracle: the CSV write+read must reproduce the
+    # source table's values exactly (doubles survive via shortest-repr
+    # round-trip, timestamps are midnight-precision)
+    oracle="SELECT * FROM orders",
+)
+def source_csv(spark, sf_dir):
+    """CSV source: write orders as headered CSV, read back with explicit
+    schema (never inference at scale — one pass saved, types pinned)."""
+    out = _roundtrip_dir(spark, "csv")
+    shutil.rmtree(out, ignore_errors=True)
+    o = table(spark, sf_dir, "orders")
+    o.write.mode("overwrite").option("header", True).csv(out)
+    schema = (
+        "o_orderkey bigint, o_custkey bigint, o_orderstatus string, "
+        "o_totalprice double, o_orderdate timestamp, o_orderpriority string"
+    )
+    return spark.read.schema(schema).option("header", True).csv(out)
+
+
+@register(
+    "source_jsonl",
+    oracle="SELECT n_nationkey, n_name, n_regionkey FROM nation",
+)
+def source_jsonl(spark, sf_dir):
+    """JSON-lines source round trip with explicit schema."""
+    out = _roundtrip_dir(spark, "jsonl")
+    shutil.rmtree(out, ignore_errors=True)
+    n = table(spark, sf_dir, "nation")
+    n.write.mode("overwrite").json(out)
+    return spark.read.schema("n_nationkey int, n_name string, n_regionkey int").json(
+        out
+    )
+
+
+_SAMPLE_SALT = 15485863  # 1e6-th prime; distinct from the quality.py salts
+_SAMPLE_THRESH = 429496729  # floor(0.1 * 2^32): 10% Bernoulli keep rate
+
+
+@register(
+    "scan_sample",
+    oracle=f"""
+SELECT l_orderkey, l_linenumber
+FROM lineitem
+WHERE {mix32_sql(f"(l_orderkey * 7 + l_linenumber + {_SAMPLE_SALT}) % 2147483648")}
+      < {_SAMPLE_THRESH}
+""",
+)
+def scan_sample(spark, sf_dir):
+    """Content-addressed Bernoulli sample (data-selection primitive for
+    training pipelines): keep iff mix32(key) < 0.1 * 2^32, where key is
+    a pure function of the row's identity — so the sample is identical
+    on ANY partitioning, any cluster size, and any engine
+    (Spark's built-in ``.sample(seed=)`` draws
+    per-partition XORShift streams, so a repartition silently yields a
+    different subset — the reproducibility hazard this rewrite removes;
+    fraction still checked within binomial bounds in tests). The key
+    folds the composite (orderkey, linenumber) and wraps at 2^31 to
+    stay inside the mixer's bit-exact input range at any scale."""
+    li = table(spark, sf_dir, "lineitem")
+    key = (
+        F.col("l_orderkey") * 7 + F.col("l_linenumber") + F.lit(_SAMPLE_SALT)
+    ) % F.lit(2147483648)
+    return (
+        li.filter(mix32(key) < F.lit(_SAMPLE_THRESH))
+        .select("l_orderkey", "l_linenumber")
+    )
+
+
+@register(
+    "source_orc",
+    oracle="SELECT * FROM supplier",
+)
+def source_orc(spark, sf_dir):
+    """ORC source round trip (built-in columnar alternative to parquet;
+    same pushdown/pruning machinery). Avro is not bundled in this
+    environment — gated out rather than stubbed since the reader API is
+    identical (`.format('avro')`)."""
+    out = _roundtrip_dir(spark, "orc")
+    shutil.rmtree(out, ignore_errors=True)
+    table(spark, sf_dir, "supplier").write.mode("overwrite").orc(out)
+    return spark.read.orc(out)
+
+
+@register(
+    "source_text",
+    oracle=r"SELECT regexp_replace(text, '[\r\n]', ' ', 'g') AS value FROM documents",
+)
+def source_text(spark, sf_dir):
+    """Plain-text source: one row per line — the rawest ingest format a
+    training-data pipeline starts from (wet/warc-style dumps). Written
+    from documents.text, read back with line counts preserved."""
+    out = _roundtrip_dir(spark, "text")
+    shutil.rmtree(out, ignore_errors=True)
+    (
+        table(spark, sf_dir, "documents")
+        .select(F.regexp_replace(F.col("text"), "[\\r\\n]", " ").alias("value"))
+        .write.mode("overwrite")
+        .text(out)
+    )
+    return spark.read.text(out)
+
+
+_STRAT_SALT = 32452843  # 2e6-th prime
+_STRAT_FRACTIONS = {"en": 0.2, "de": 1.0, "es": 0.5, "fr": 1.0, "zh": 1.0}
+
+
+def _strat_oracle() -> str:
+    cases = " ".join(
+        f"WHEN '{lang}' THEN {int(frac * 4294967296)}"
+        for lang, frac in sorted(_STRAT_FRACTIONS.items())
+    )
+    return f"""
+SELECT doc_id, lang
+FROM documents
+WHERE {mix32_sql(f"doc_id + {_STRAT_SALT}")}
+      < (CASE lang {cases} ELSE 0 END)
+"""
+
+
+@register("scan_stratified", oracle=_strat_oracle())
+def scan_stratified(spark, sf_dir):
+    """Stratified sampling: per-class keep fractions — the data-mixing
+    primitive for training-set curation (e.g. downsample the dominant
+    language, keep the rare ones). The coin is mix32(doc_id + salt)
+    compared against a per-stratum threshold (not
+    ``sampleBy(seed=)``, whose per-partition RNG streams change the
+    subset on repartition — this rewrite is partition- and
+    engine-invariant, the property a resumable 100 TB curation run
+    needs). Thresholds ride a small CASE expression, not a join — the
+    stratum table is query-constant. Per-stratum counts checked in
+    tests."""
+    thresh = F.lit(0)
+    for lang, frac in sorted(_STRAT_FRACTIONS.items()):
+        thresh = F.when(F.col("lang") == lang, F.lit(int(frac * 4294967296))).otherwise(
+            thresh
+        )
+    return (
+        table(spark, sf_dir, "documents")
+        .filter(mix32(F.col("doc_id") + F.lit(_STRAT_SALT)) < thresh)
+        .select("doc_id", "lang")
+    )
+
+
+@register(
+    "source_binaryfile",
+    # replays the per-region blob construction relationally: the file
+    # bytes ARE a non-ASCII '§<region>' marker line + the ordered
+    # nation lines. BYTE-exact replay: this DuckDB's md5()
+    # only takes VARCHAR and substring() only slices characters, so the
+    # oracle goes through encode() (VARCHAR -> UTF-8 BLOB) for
+    # octet_length and fingerprints the HEX of the first 1024 bytes
+    # (2048 hex chars — always ASCII, so md5-of-hex is byte-exact on
+    # both engines no matter what bytes the blob holds; the old
+    # md5(substr(body,...)) was character semantics and held only
+    # because the content happened to be ASCII).
+    oracle="""
+SELECT 'region_' || r_regionkey || '.bin' AS file_name,
+       CAST(octet_length(encode(body)) AS BIGINT) AS length,
+       md5(substr(hex(encode(body)), 1, 2048)) AS head_md5
+FROM (
+  SELECT n.n_regionkey AS r_regionkey,
+         '§' || n.n_regionkey || chr(10) ||
+         string_agg(n.n_nationkey || '|' || n.n_name, chr(10)
+                    ORDER BY n.n_nationkey) AS body
+  FROM nation n GROUP BY n.n_regionkey
+)
+ORDER BY file_name
+""",
+)
+def source_binaryfile(spark, sf_dir):
+    """Spark's binaryFile source: each file becomes one row of (path,
+    modificationTime, length, content) — the ingestion shape for opaque
+    media blobs (images/audio) before a mapInPandas decode stage.
+
+    Exact oracle: raw corpus-file sizes are
+    environment-specific, so the operator stages its own deterministic
+    blobs (one file per region, a non-ASCII '§<region>' marker line +
+    the region's nation rows in key order) and ingests them through the
+    REAL binaryFile source, then projects only content-derived columns:
+    path tail, BYTE length, and a fingerprint of the first KiB of BYTES
+    — exactly what a media-ingest manifest records. The fingerprint is
+    md5 over the uppercase HEX of those bytes (not the bytes
+    themselves): hex is ASCII, so the same md5 computes byte-exactly in
+    DuckDB (whose md5 is VARCHAR-only) for ANY blob content — the '§'
+    marker (2 UTF-8 bytes, 1 char) exists precisely to catch a
+    char-semantics regression in either engine. The oracle
+    rebuilds each blob relationally, so the whole read path (glob →
+    whole-file bytes → fingerprint) is hash-checked."""
+    out = _roundtrip_dir(spark, "binaryfile")
+    shutil.rmtree(out, ignore_errors=True)
+    os.makedirs(out, exist_ok=True)
+    nations = table(spark, sf_dir, "nation").select(
+        "n_regionkey", "n_nationkey", "n_name"
+    ).collect()  # 25-row dimension: bounded driver model state
+    by_region: dict[int, list] = {}
+    for r in nations:
+        by_region.setdefault(r.n_regionkey, []).append(r)
+    for rk, rows in by_region.items():
+        body = f"§{rk}\n" + "\n".join(
+            f"{r.n_nationkey}|{r.n_name}"
+            for r in sorted(rows, key=lambda r: r.n_nationkey)
+        )
+        with open(os.path.join(out, f"region_{rk}.bin"), "wb") as f:
+            f.write(body.encode("utf-8"))
+    if not by_region:  # empty corpus: no files staged, glob would fail
+        return spark.createDataFrame(
+            [], "file_name string, length bigint, head_md5 string"
+        )
+    d = spark.read.format("binaryFile").load(f"{out}/*.bin")
+    return d.select(
+        F.element_at(F.split("path", "/"), -1).alias("file_name"),
+        F.col("length"),
+        F.md5(F.hex(F.expr("substring(content, 1, 1024)"))).alias("head_md5"),
+    ).orderBy("file_name")
+
+
+@register(
+    "source_csv_permissive",
+    # deterministic outcome: all N real rows parse, the 2 injected
+    # malformed lines land in _corrupt_record
+    oracle="""
+SELECT count(*) + 2 AS n_rows,
+       CAST(2 AS BIGINT) AS n_corrupt,
+       count(*) AS n_good,
+       CAST(count(*) AS INTEGER) AS n_expected_good
+FROM nation
+""",
+)
+def source_csv_permissive(spark, sf_dir):
+    """PERMISSIVE CSV parsing with corrupt-record capture: malformed
+    lines land in _corrupt_record instead of failing the job — the
+    only sane default for 100 TB of found data. Writes a CSV with
+    deliberately broken rows, reads with a pinned schema, and returns
+    per-file good/bad counts plus the malformed payloads."""
+    out = _roundtrip_dir(spark, "csv_bad")
+    shutil.rmtree(out, ignore_errors=True)
+    os.makedirs(out, exist_ok=True)
+    n = table(spark, sf_dir, "nation").count()
+    rows = ["n_nationkey,n_name,n_regionkey"]
+    for r in table(spark, sf_dir, "nation").collect():
+        rows.append(f"{r.n_nationkey},{r.n_name},{r.n_regionkey}")
+    rows.insert(3, "not_an_int,BROKEN_ROW")          # malformed
+    rows.append("also,broken,row,too,many,fields")   # malformed
+    with open(os.path.join(out, "part-0.csv"), "w") as f:
+        f.write("\n".join(rows) + "\n")
+    schema = (
+        "n_nationkey int, n_name string, n_regionkey int, _corrupt_record string"
+    )
+    df = (
+        spark.read.schema(schema)
+        .option("header", True)
+        .option("mode", "PERMISSIVE")
+        .option("columnNameOfCorruptRecord", "_corrupt_record")
+        .csv(out)
+        # SPARK-21610: the corrupt-record column needs a materialized
+        # scan. localCheckpoint, NOT cache(): cache is keyed on the
+        # logical plan, so a rerun against the same tmp path with
+        # different file contents (another sf_dir) would silently reuse
+        # the stale cached relation.
+        .localCheckpoint(eager=True)
+    )
+    return df.agg(
+        F.count(F.lit(1)).alias("n_rows"),
+        F.count("_corrupt_record").alias("n_corrupt"),
+        F.sum(F.when(F.col("_corrupt_record").isNull(), 1).otherwise(0)).alias(
+            "n_good"
+        ),
+        F.lit(n).alias("n_expected_good"),
+    )
+
+
+@register(
+    "source_corrupt_parquet",
+    # deterministic: the valid file's rows all survive, the corrupt
+    # file contributes nothing and fails nothing
+    oracle="""
+SELECT CAST(count(*) AS BIGINT) AS n_rows,
+       CAST(sum(CAST(n_nationkey AS BIGINT)) AS BIGINT) AS key_sum
+FROM nation
+""",
+)
+def source_corrupt_parquet(spark, sf_dir):
+    """Corrupt-file tolerance: a directory holding one valid parquet
+    file and one truncated/garbage file must still scan — with
+    `ignoreCorruptFiles`, the reader drops unreadable files (logged)
+    instead of failing the job. At 100 TB a few bad objects per million
+    are routine (partial uploads, bitrot, killed writers); a pipeline
+    that dies on the first one never finishes. The flag is scoped to
+    this read via the DataFrameReader option, not set session-wide —
+    silently dropping files is a per-source decision, not a default."""
+    out = _roundtrip_dir(spark, "parquet_corrupt")
+    shutil.rmtree(out, ignore_errors=True)
+    n = table(spark, sf_dir, "nation")
+    n.coalesce(1).write.mode("overwrite").parquet(out)
+    # a garbage file with the right extension: magic bytes absent
+    with open(os.path.join(out, "part-corrupt.parquet"), "wb") as f:
+        f.write(b"\x00NOT A PARQUET FILE" * 64)
+    df = (
+        spark.read.option("ignoreCorruptFiles", "true")
+        .schema(n.schema)
+        .parquet(out)
+    )
+    return df.agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_rows"),
+        F.sum(F.col("n_nationkey").cast("bigint")).cast("bigint").alias("key_sum"),
+    )

@@ -412,3 +412,467 @@ def ts_cusum(spark, sf_dir):
             rnd(F.abs("cusum") / (F.col("n") * 10000.0), "max_dev"),
         )
     )
+
+
+# ---------------------------------------------------------------------------
+# ts_theil_sen
+
+_US_PER_DAY = 86400000000.0
+
+
+# ``ts_theil_sen`` — Theil–Sen robust trend (median of pairwise
+# slopes) per key, in per-day units.
+@register(
+    "ts_theil_sen",
+    oracle=f"""
+WITH ev AS (
+    SELECT user_id, epoch_us(ts) AS t, value AS v
+    FROM events WHERE user_id % 10 = 0
+),
+slopes AS (
+    SELECT a.user_id,
+           ((b.v - a.v) * {_US_PER_DAY!r}) / CAST(b.t - a.t AS DOUBLE) AS s
+    FROM ev a JOIN ev b ON a.user_id = b.user_id AND a.t < b.t
+),
+ranked AS (
+    SELECT user_id, s,
+           row_number() OVER (PARTITION BY user_id ORDER BY s) AS rn,
+           count(*) OVER (PARTITION BY user_id) AS cnt
+    FROM slopes
+)
+SELECT user_id, CAST(max(cnt) AS BIGINT) AS n_pairs,
+       {o_rnd("avg(s)", "slope_per_day", nd=6)}
+FROM ranked
+WHERE rn IN ((cnt + 1) // 2, (cnt + 2) // 2)
+GROUP BY user_id
+""",
+)
+def ts_theil_sen(spark, sf_dir):
+    """Theil–Sen robust trend estimator per user: the MEDIAN of all
+    pairwise slopes (v_j - v_i)/(t_j - t_i), i < j by time — a 29%-
+    breakdown-point trend that one outlier can't drag (vs ts_cusum's
+    mean-shift detection and ml_linreg's least squares). Slopes are in
+    per-day units (microsecond timestamps scaled by 86400e6, double
+    math in the same operation order on both engines), medians take
+    the lower/upper-middle average via the explicit row_number
+    formula — identical arithmetic in the oracle, 6dp.
+
+    The pair join is per-key (equi-join on user_id with t_a < t_b), so
+    cost is Σ n_k²/2 bounded by the largest single key (~67 events →
+    ~2.2k pairs at sf0.01), never a cross-corpus product; keys are
+    independent and shuffle once on user_id. At 100 TB per-key history
+    grows: production bounds pairs per key (sampled pairs estimate the
+    same median within stated error) — here the %10 user slice keeps
+    the exhibit exact."""
+    ev = (
+        table(spark, sf_dir, "events")
+        .where(F.col("user_id") % 10 == 0)
+        .select("user_id", F.unix_micros("ts").alias("t"), F.col("value").alias("v"))
+    )
+    a = ev.select("user_id", F.col("t").alias("ta"), F.col("v").alias("va"))
+    b = ev.select(
+        F.col("user_id").alias("ub"),
+        F.col("t").alias("tb"),
+        F.col("v").alias("vb"),
+    )
+    slopes = (
+        a.join(b, (a.user_id == b.ub) & (a.ta < b.tb))
+        .select(
+            "user_id",
+            (
+                ((F.col("vb") - F.col("va")) * F.lit(_US_PER_DAY))
+                / (F.col("tb") - F.col("ta")).cast("double")
+            ).alias("s"),
+        )
+    )
+    wo = Window.partitionBy("user_id").orderBy("s")
+    wc = Window.partitionBy("user_id")
+    ranked = slopes.select(
+        "user_id",
+        "s",
+        F.row_number().over(wo).alias("rn"),
+        F.count(F.lit(1)).over(wc).alias("cnt"),
+    )
+    mid = ranked.where(
+        (F.col("rn") == F.expr("(cnt + 1) div 2"))
+        | (F.col("rn") == F.expr("(cnt + 2) div 2"))
+    )
+    return mid.groupBy("user_id").agg(
+        F.max("cnt").cast("bigint").alias("n_pairs"),
+        rnd(F.avg("s"), "slope_per_day", nd=6),
+    )
+
+
+# ---------------------------------------------------------------------------
+# ``ts_changepoint`` — best single mean-shift split per key by exact
+# SSE reduction (binary-segmentation depth 1), from running sums via
+# ordered windows — the offline twin of ts_cusum's online detector.
+
+
+@register(
+    "ts_changepoint",
+    oracle="""
+WITH ev AS (
+    SELECT user_id, epoch_us(ts) AS t, value AS v,
+           row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id)
+               AS i,
+           count(*) OVER (PARTITION BY user_id) AS n
+    FROM events WHERE user_id % 10 = 0
+),
+c AS (
+    SELECT user_id, t, i, n,
+           sum(v) OVER (PARTITION BY user_id ORDER BY i) AS pre,
+           sum(v*v) OVER (PARTITION BY user_id ORDER BY i) AS pre2
+    FROM ev
+),
+tot AS (
+    SELECT user_id, i, t, n, pre, pre2,
+           last_value(pre) OVER (PARTITION BY user_id ORDER BY i
+               ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
+               AS tt,
+           last_value(pre2) OVER (PARTITION BY user_id ORDER BY i
+               ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
+               AS tt2
+    FROM c
+),
+g AS (
+    SELECT user_id, i, t,
+           ((tt2 - (tt*tt)/n))
+           - ((pre2 - (pre*pre)/i)
+              + ((tt2-pre2) - ((tt-pre)*(tt-pre))/(n-i))) AS gain
+    FROM tot WHERE i < n
+)
+SELECT user_id, split_idx, split_t, gain_r FROM (
+    SELECT user_id, i AS split_idx, t AS split_t,
+           floor(gain * 10000 + 0.5) / 10000 AS gain_r,
+           row_number() OVER (PARTITION BY user_id
+               ORDER BY floor(gain * 10000 + 0.5) / 10000 DESC, i) AS rn
+    FROM g)
+WHERE rn = 1
+""",
+)
+def ts_changepoint(spark, sf_dir):
+    """Best single mean-shift changepoint per user — binary
+    segmentation at depth 1: the split k maximizing the exact SSE
+    reduction total−(left+right), each SSE from the running-sum
+    identity Σv² − (Σv)²/n. One ordered window pass builds prefix
+    sums; totals are the prefix value at i=n via an explicit
+    full-frame last_value (NOT an unordered partition aggregate,
+    whose summation order is partitioning-dependent) — so every
+    double is produced by the same sequential fold on both engines.
+    Argmax takes the earliest split on 4dp-rounded gain.
+
+    The offline complement to ts_cusum's sequential detector: cusum
+    flags WHEN a drift crosses a threshold in arrival order;
+    this finds the globally best retrospective split. Per-key cost is
+    O(n) after one shuffle on user_id; deeper segmentation recurses
+    on the two halves (driver-side loop, log-depth), same plan shape."""
+    ev = (
+        table(spark, sf_dir, "events")
+        .where(F.col("user_id") % 10 == 0)
+        .select(
+            "user_id",
+            F.unix_micros("ts").alias("t"),
+            F.col("value").alias("v"),
+            "event_id",
+        )
+    )
+    ev = ev.withColumn(
+        "i",
+        F.row_number().over(
+            Window.partitionBy("user_id").orderBy("t", "event_id")
+        ),
+    ).withColumn(
+        "n", F.count(F.lit(1)).over(Window.partitionBy("user_id"))
+    )
+    run = Window.partitionBy("user_id").orderBy("i")
+    full = (
+        Window.partitionBy("user_id")
+        .orderBy("i")
+        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    )
+    c = (
+        ev.withColumn("pre", F.sum("v").over(run))
+        .withColumn("pre2", F.sum(F.col("v") * F.col("v")).over(run))
+        .withColumn("tt", F.last("pre").over(full))
+        .withColumn("tt2", F.last("pre2").over(full))
+    )
+    gain = (
+        F.col("tt2") - (F.col("tt") * F.col("tt")) / F.col("n")
+    ) - (
+        (F.col("pre2") - (F.col("pre") * F.col("pre")) / F.col("i"))
+        + (
+            (F.col("tt2") - F.col("pre2"))
+            - ((F.col("tt") - F.col("pre")) * (F.col("tt") - F.col("pre")))
+            / (F.col("n") - F.col("i"))
+        )
+    )
+    g = (
+        c.where(F.col("i") < F.col("n"))
+        .withColumn("gain_r", rnd(gain))
+        .withColumn(
+            "rn",
+            F.row_number().over(
+                Window.partitionBy("user_id").orderBy(
+                    F.desc("gain_r"), F.asc("i")
+                )
+            ),
+        )
+        .where(F.col("rn") == 1)
+    )
+    return g.select(
+        "user_id",
+        F.col("i").cast("bigint").alias("split_idx"),
+        F.col("t").alias("split_t"),
+        "gain_r",
+    )
+
+
+# ---------------------------------------------------------------------------
+# ts_anomaly_mad
+
+_MAD_K = 3.5  # Iglewicz–Hoaglin robust-z cutoff (on raw MAD here)
+
+
+# ``ts_anomaly_mad`` — robust per-key anomaly flags via median
+# absolute deviation (|x − med| > 3.5·MAD, the Iglewicz–Hoaglin
+# rule): the robust-statistics counterpart of dq_outliers' moment
+# z-score (one far outlier inflates σ and masks its neighbors; MAD
+# doesn't budge).
+@register(
+    "ts_anomaly_mad",
+    oracle=f"""
+WITH ev AS (
+    SELECT user_id, event_id, value AS v FROM events WHERE user_id % 5 = 0
+),
+med AS (
+    SELECT user_id, avg(v) AS med FROM (
+        SELECT user_id, v,
+               row_number() OVER (PARTITION BY user_id ORDER BY v, event_id)
+                   AS rn,
+               count(*) OVER (PARTITION BY user_id) AS cnt
+        FROM ev)
+    WHERE rn IN ((cnt + 1) // 2, (cnt + 2) // 2)
+    GROUP BY user_id
+),
+mad AS (
+    SELECT user_id, avg(ad) AS mad FROM (
+        SELECT e.user_id, abs(e.v - m.med) AS ad,
+               row_number() OVER (PARTITION BY e.user_id
+                   ORDER BY abs(e.v - m.med), e.event_id) AS rn,
+               count(*) OVER (PARTITION BY e.user_id) AS cnt
+        FROM ev e JOIN med m ON m.user_id = e.user_id)
+    WHERE rn IN ((cnt + 1) // 2, (cnt + 2) // 2)
+    GROUP BY user_id
+)
+SELECT e.user_id, e.event_id, {o_rnd("e.v", "value_r")},
+       {o_rnd("abs(e.v - m.med)", "abs_dev")}
+FROM ev e
+JOIN med m ON m.user_id = e.user_id
+JOIN mad d ON d.user_id = e.user_id
+WHERE d.mad > 0 AND abs(e.v - m.med) > {_MAD_K!r} * d.mad
+""",
+)
+def ts_anomaly_mad(spark, sf_dir):
+    """Robust per-user anomaly flags: an event is anomalous when its
+    absolute deviation from the user's MEDIAN value exceeds 3.5× the
+    user's MEDIAN absolute deviation (Iglewicz–Hoaglin). Medians use
+    the explicit lower/upper-middle row_number formula (the
+    ts_theil_sen pattern), so every double replays exactly.
+
+    Why next to dq_outliers (moment z-score): one genuine spike
+    inflates σ enough to mask adjacent smaller anomalies and drags the
+    mean toward itself; median and MAD have a 50% breakdown point, so
+    the flags stay anchored to the bulk of the distribution. Two
+    median passes = three shuffles on user_id total (values, absolute
+    deviations, final join) — per-key cost O(n log n) in the sort,
+    keys independent, no cross-key state. The standard robust monitor
+    for per-entity metric streams."""
+    ev = (
+        table(spark, sf_dir, "events")
+        .where(F.col("user_id") % 5 == 0)
+        .select("user_id", "event_id", F.col("value").alias("v"))
+    )
+
+    def median_of(df, col, out):
+        wo = Window.partitionBy("user_id").orderBy(F.col(col), "event_id")
+        wc = Window.partitionBy("user_id")
+        r = df.select(
+            "user_id",
+            F.col(col),
+            F.row_number().over(wo).alias("rn"),
+            F.count(F.lit(1)).over(wc).alias("cnt"),
+        )
+        return (
+            r.where(
+                (F.col("rn") == F.expr("(cnt + 1) div 2"))
+                | (F.col("rn") == F.expr("(cnt + 2) div 2"))
+            )
+            .groupBy("user_id")
+            .agg(F.avg(col).alias(out))
+        )
+
+    med = median_of(ev, "v", "med")
+    devs = ev.join(med, "user_id").withColumn(
+        "ad", F.abs(F.col("v") - F.col("med"))
+    )
+    mad = median_of(devs, "ad", "mad")
+    return (
+        devs.join(mad, "user_id")
+        .where((F.col("mad") > 0) & (F.col("ad") > F.lit(_MAD_K) * F.col("mad")))
+        .select(
+            "user_id",
+            "event_id",
+            rnd(F.col("v"), "value_r"),
+            rnd(F.col("ad"), "abs_dev"),
+        )
+    )
+
+
+@register(
+    "ts_interpolate",
+    oracle="""
+WITH daily AS (
+    SELECT user_id, CAST(date_trunc('day', ts) AS DATE) AS day,
+           avg(value) AS v
+    FROM events WHERE user_id % 50 = 0 AND event_type = 'purchase'
+    GROUP BY 1, 2
+),
+spine AS (
+    SELECT user_id,
+           CAST(unnest(generate_series(min(day), max(day),
+                                       INTERVAL 1 DAY)) AS DATE) AS day
+    FROM daily GROUP BY user_id
+),
+joined AS (
+    SELECT s.user_id, s.day, d.v,
+           last_value(d.v IGNORE NULLS) OVER w_prev AS pv,
+           last_value(CASE WHEN d.v IS NOT NULL THEN s.day END IGNORE NULLS)
+               OVER w_prev AS pd,
+           first_value(d.v IGNORE NULLS) OVER w_next AS nv,
+           first_value(CASE WHEN d.v IS NOT NULL THEN s.day END IGNORE NULLS)
+               OVER w_next AS nd
+    FROM spine s LEFT JOIN daily d USING (user_id, day)
+    WINDOW
+      w_prev AS (PARTITION BY user_id ORDER BY day
+                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
+      w_next AS (PARTITION BY user_id ORDER BY day
+                 ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)
+)
+SELECT user_id, day,
+       floor((CASE
+           WHEN v IS NOT NULL THEN v
+           WHEN pv IS NULL THEN nv
+           WHEN nv IS NULL THEN pv
+           ELSE pv + (nv - pv) * date_diff('day', pd, day)
+                              / date_diff('day', pd, nd)
+       END) * 10000 + 0.5) / 10000 AS v_interp,
+       (v IS NULL) AS filled
+FROM joined
+""",
+)
+def ts_interpolate(spark, sf_dir):
+    """Time-series gap filling with linear interpolation (the
+    Timescale/InfluxDB `interpolate()` operator): build each user's
+    complete day spine, left-join observed daily averages, and fill
+    gaps linearly between the previous and next observation (edges
+    carry the nearest value). `filled` marks synthesized rows.
+
+    Scale notes: one shuffle keys everything by user_id; the spine
+    explode is a narrow constant-bounded expansion; both IGNORE NULLS
+    windows run in the SAME sort order (day) over the same partition
+    key, so Catalyst executes them in one Window pass each direction
+    with no extra exchange. State per user = one running (value, day)
+    pair per direction."""
+    ev = table(spark, sf_dir, "events")
+    daily = (
+        ev.where((F.col("user_id") % 50 == 0) & (F.col("event_type") == "purchase"))
+        .groupBy(
+            "user_id",
+            F.date_trunc("day", "ts").cast("date").alias("day"),
+        )
+        .agg(F.avg("value").alias("v"))
+    )
+    spine = daily.groupBy("user_id").agg(
+        F.explode(
+            F.sequence(F.min("day"), F.max("day"), F.expr("INTERVAL 1 DAY"))
+        ).alias("day")
+    )
+    j = spine.join(daily, ["user_id", "day"], "left")
+    w_prev = (
+        Window.partitionBy("user_id")
+        .orderBy("day")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    w_next = (
+        Window.partitionBy("user_id")
+        .orderBy("day")
+        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
+    )
+    obs_day = F.when(F.col("v").isNotNull(), F.col("day"))
+    j = j.select(
+        "user_id",
+        "day",
+        "v",
+        F.last("v", ignorenulls=True).over(w_prev).alias("pv"),
+        F.last(obs_day, ignorenulls=True).over(w_prev).alias("pd"),
+        F.first("v", ignorenulls=True).over(w_next).alias("nv"),
+        F.first(obs_day, ignorenulls=True).over(w_next).alias("nd"),
+    )
+    interp = (
+        F.when(F.col("v").isNotNull(), F.col("v"))
+        .when(F.col("pv").isNull(), F.col("nv"))
+        .when(F.col("nv").isNull(), F.col("pv"))
+        .otherwise(
+            F.col("pv")
+            + (F.col("nv") - F.col("pv"))
+            * F.datediff(F.col("day"), F.col("pd"))
+            / F.datediff(F.col("nd"), F.col("pd"))
+        )
+    )
+    return j.select(
+        "user_id",
+        "day",
+        rnd(interp, "v_interp"),
+        F.col("v").isNull().alias("filled"),
+    )
+
+
+@register(
+    "ts_ewma",
+    oracle=f"""
+WITH recent AS (
+  SELECT user_id, value,
+         row_number() OVER (PARTITION BY user_id
+                            ORDER BY ts DESC, event_id DESC) AS age
+  FROM events
+)
+SELECT user_id,
+       {o_rnd("CAST(sum(CAST(value * power(0.5, age - 1) AS DECIMAL(25,6))) AS DOUBLE) / CAST(sum(CAST(power(0.5, age - 1) AS DECIMAL(25,6))) AS DOUBLE)", "ewma")}
+FROM recent
+WHERE age <= 20
+GROUP BY user_id
+""",
+)
+def ts_ewma(spark, sf_dir):
+    """Exponentially-weighted moving average (alpha=0.5) of each user's
+    latest 20 events. The recursive EWMA is restated in closed form as a
+    normalized weighted sum over a bounded recency window, so it's one
+    shuffle (by user) + one window + one agg — no iterative pass. The
+    20-row bound keeps the 0.5^age weights representable at any history
+    length; weighted terms sum through DECIMAL for order-invariance."""
+    ev = table(spark, sf_dir, "events")
+    w = Window.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
+    weight = F.pow(0.5, F.col("age") - 1)
+    return (
+        ev.withColumn("age", F.row_number().over(w))
+        .filter(F.col("age") <= 20)
+        .groupBy("user_id")
+        .agg(
+            rnd(
+                F.sum((F.col("value") * weight).cast(DEC)).cast("double")
+                / F.sum(weight.cast(DEC)).cast("double"),
+                "ewma",
+            )
+        )
+    )

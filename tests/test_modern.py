@@ -229,7 +229,7 @@ def test_percentile_approx_sample_tracks_exact(spark, sf_dir):
     in the k=256 sample; the native percentile_approx exhibit agrees
     with the exact median within its declared accuracy."""
     from terasort_spark.catalog import table
-    from terasort_spark.operators.extras import (
+    from terasort_spark.operators.aggregates import (
         _APA_K,
         agg_percentile_approx_native,
     )

@@ -9,7 +9,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from terasort_spark.catalog import table
-from terasort_spark.operators.relational6 import bloom_prefilter
+from terasort_spark.operators.joins import bloom_prefilter
 from terasort_spark.plans.checks import assert_no_cartesian
 from terasort_spark.registry import queries
 

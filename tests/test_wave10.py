@@ -249,8 +249,7 @@ def test_stream_lsh_equals_sequential_batch_twin(spark, sf_dir):
     admitted-so-far set, keeps folded forward. Any divergence (state
     read after append, a round seeing its own admissions, checkpoint
     replay double-admitting) shows up as a row mismatch."""
-    from terasort_spark.operators.llm_dedup import lsh_signatures_df
-    from terasort_spark.operators.wave8 import fuzzy_dropped
+    from terasort_spark.operators.llm_dedup import fuzzy_dropped, lsh_signatures_df
 
     docs = table(spark, sf_dir, "documents")
     sig, buckets = lsh_signatures_df(docs.select("doc_id", "text"))
@@ -323,7 +322,7 @@ def test_stream_lsh_state_read_prunes_partitions(spark, tmp_path):
     (a) the scan's inputFiles stay inside those two directories and
     (b) the filter shows up as a partition filter (pruned at listing
     time), not a post-scan predicate."""
-    from terasort_spark.operators.wave10 import (
+    from terasort_spark.operators.llm_dedup import (
         _BUCKET_SHARDS,
         _read_pruned_buckets,
     )
@@ -382,11 +381,11 @@ def test_stream_lsh_compaction_preserves_hash_and_bounds_files(
     import glob
     import os
 
-    import terasort_spark.operators.wave10 as w10
+    from terasort_spark.operators import llm_dedup
     from terasort_spark.operators._util import scratch_dir
 
     want = sorted(map(tuple, _Q["dedup_stream_lsh"](spark, sf_dir).collect()))
-    monkeypatch.setattr(w10, "_COMPACT_FILES", 1)
+    monkeypatch.setattr(llm_dedup, "_COMPACT_FILES", 1)
     got = sorted(map(tuple, _Q["dedup_stream_lsh"](spark, sf_dir).collect()))
     assert got == want
     st_b = os.path.join(scratch_dir(spark, "stream_lsh"), "state_buckets")
@@ -408,7 +407,7 @@ def test_stream_lsh_honors_explicit_width_conf(spark, monkeypatch):
     executor count); absent that, the measured local default of 8.
     Captured from inside the run body, and the session dial must be
     restored afterwards."""
-    import terasort_spark.operators.wave10 as w10
+    from terasort_spark.operators import llm_dedup
     from terasort_spark.operators._util import STREAM_SHUFFLE_CONF
 
     seen = {}
@@ -417,16 +416,16 @@ def test_stream_lsh_honors_explicit_width_conf(spark, monkeypatch):
         seen["width"] = sp.conf.get("spark.sql.shuffle.partitions")
         return sp.range(1)
 
-    monkeypatch.setattr(w10, "_stream_lsh_run", fake_run)
+    monkeypatch.setattr(llm_dedup, "_stream_lsh_run", fake_run)
     prev = spark.conf.get("spark.sql.shuffle.partitions")
 
-    w10.dedup_stream_lsh(spark, "/unused")
+    llm_dedup.dedup_stream_lsh(spark, "/unused")
     assert seen["width"] == "8"
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev
 
     spark.conf.set(STREAM_SHUFFLE_CONF, "12")
     try:
-        w10.dedup_stream_lsh(spark, "/unused")
+        llm_dedup.dedup_stream_lsh(spark, "/unused")
     finally:
         spark.conf.unset(STREAM_SHUFFLE_CONF)
     assert seen["width"] == "12"

@@ -307,7 +307,7 @@ def test_ndcg_recomputes_from_system_and_exact_rankings(spark, sf_dir):
     emitted system ranking and the exact top-5 ground truth."""
     import math
 
-    from terasort_spark.operators.wave11 import _IDCG6
+    from terasort_spark.operators.ml import _IDCG6
 
     sys_rows = _Q["sim_cosine_sq8"](spark, sf_dir).collect()
     exact = _Q["sim_cosine_topk"](spark, sf_dir).collect()
@@ -334,7 +334,7 @@ def test_ndcg_recomputes_from_system_and_exact_rankings(spark, sf_dir):
 
 
 def test_bloom_skip_prunes_and_never_misses(spark, sf_dir):
-    from terasort_spark.operators.wave11 import _BLOOM_BUCKETS, _BLOOM_PROBES
+    from terasort_spark.operators.scans import _BLOOM_BUCKETS, _BLOOM_PROBES
 
     rows = {r["probe_key"]: r for r in _Q["scan_bloom_skip"](spark, sf_dir).collect()}
     assert set(rows) == set(_BLOOM_PROBES)

@@ -13,14 +13,14 @@ import pytest
 from pyspark.sql import functions as F
 
 from terasort_spark.catalog import table
-from terasort_spark.operators.tokenizer import _word_counts
-from terasort_spark.operators.wave12 import (
-    _VACUUM_BASE,
+from terasort_spark.operators.llm_text import (
     WP_MAXLEN,
     WP_PIECE_LEN,
     _wp_encode,
     _wp_inventory,
 )
+from terasort_spark.operators.scans import _VACUUM_BASE
+from terasort_spark.operators.tokenizer import _word_counts
 from terasort_spark.registry import queries
 
 _Q = queries()

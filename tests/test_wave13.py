@@ -11,7 +11,7 @@ from collections import defaultdict
 from pyspark.sql import functions as F
 
 from terasort_spark.catalog import table
-from terasort_spark.operators.wave13 import (
+from terasort_spark.operators.pipelines import (
     FRONTIER_PER_HOST,
     FRONTIER_ROUNDS,
 )

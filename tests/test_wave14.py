@@ -10,7 +10,7 @@ from collections import Counter
 from pyspark.sql import functions as F
 
 from terasort_spark.catalog import table
-from terasort_spark.operators.wave14 import ROUGE_PAIRS
+from terasort_spark.operators.ml import ROUGE_PAIRS
 from terasort_spark.registry import queries
 
 _Q = queries()

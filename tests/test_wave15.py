@@ -127,7 +127,7 @@ def test_hll_registers_merge_associatively(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from terasort_spark.catalog import table
-    from terasort_spark.operators.wave15 import _HLL_M, _HLL_P, _HLL_WBITS
+    from terasort_spark.operators.aggregates import _HLL_M, _HLL_P, _HLL_WBITS
 
     o = table(spark, sf_dir, "orders")
 

@@ -135,7 +135,7 @@ def test_tws_value_state_ttl_expires_and_persists(spark, sf_dir):
     import pytest as _pytest
     from pyspark.sql.streaming.stateful_processor import StatefulProcessor
 
-    from terasort_spark.operators.wave15 import (
+    from terasort_spark.operators.sessions import (
         _ROCKSDB_PROVIDER,
         _ensure_state_codec,
     )
@@ -302,7 +302,7 @@ def test_tws_delete_if_exists_resets_state_mid_stream(spark, sf_dir):
     import pandas as pd
     from pyspark.sql.streaming.stateful_processor import StatefulProcessor
 
-    from terasort_spark.operators.wave15 import (
+    from terasort_spark.operators.sessions import (
         _ROCKSDB_PROVIDER,
         _ensure_state_codec,
     )

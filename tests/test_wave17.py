@@ -35,7 +35,7 @@ def test_cc_star_matches_union_find(spark, sf_dir):
     """The star-alternation fixpoint must equal a sequential union-find
     over the same edge list (the algorithm-independent ground truth,
     checked independently of the DuckDB oracle)."""
-    from terasort_spark.operators.wave17 import _lsh_edges
+    from terasort_spark.operators.graph import _lsh_edges
 
     edges = [
         (r["a"], r["b"])
@@ -67,7 +67,7 @@ def test_star_components_observe_loop_on_tiny_and_empty_inputs(spark):
     an empty label table without hanging on Observation.get, and a
     two-clique graph must label every node with its component minimum
     in <= the round cap."""
-    from terasort_spark.operators.wave17 import star_components
+    from terasort_spark.operators.graph import star_components
 
     empty = spark.createDataFrame([], "a long, b long")
     labels, rounds = star_components(spark, empty)
@@ -89,7 +89,7 @@ def test_star_components_observe_loop_on_tiny_and_empty_inputs(spark):
 def test_bfs_levels_seeds_and_monotonicity(spark, sf_dir):
     """Seeds sit at hop 0; every node at hop k>0 has a neighbor at
     hop k-1 (the BFS frontier invariant)."""
-    from terasort_spark.operators.wave17 import _lsh_edges
+    from terasort_spark.operators.graph import _lsh_edges
 
     hops = {
         r["doc_id"]: r["hops"]
@@ -140,7 +140,7 @@ def test_bloom_probe_is_deterministic(spark, sf_dir):
 
 
 def test_semdedup_centroids_own_cluster_and_dup_replay(spark, sf_dir):
-    from terasort_spark.operators.wave17 import _SEM_K, _SEM_TAU
+    from terasort_spark.operators.llm_dedup import _SEM_K, _SEM_TAU
 
     rows = _Q["dedup_semantic"](spark, sf_dir).collect()
     by_id = {r["vec_id"]: r for r in rows}

@@ -32,8 +32,7 @@ def _peel(edges, k):
 def test_kcore_matches_full_peeling(spark, sf_dir):
     """The fixed-6-round answer must equal peeling run to convergence
     (proves 6 rounds suffice at this SF) and the sequential reference."""
-    from terasort_spark.operators.wave17 import _lsh_edges
-    from terasort_spark.operators.wave18 import _KCORE_K
+    from terasort_spark.operators.graph import _KCORE_K, _lsh_edges
 
     edges = [
         (r["a"], r["b"])

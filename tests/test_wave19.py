@@ -18,7 +18,7 @@ _Q = queries()
 
 
 def test_maxsim_scores_bounded_by_token_count(spark, sf_dir):
-    from terasort_spark.operators.wave19 import _MS_NQ, _MS_TOK, _MS_TOPK
+    from terasort_spark.operators.llm_similarity import _MS_NQ, _MS_TOK, _MS_TOPK
 
     rows = _Q["sim_maxsim"](spark, sf_dir).collect()
     assert rows
@@ -163,7 +163,7 @@ def test_stream_left_outer_join_equals_batch(spark, sf_dir, tmp_path, state_stor
 
 
 def test_decay_counter_matches_reference_for_one_user(spark, sf_dir):
-    from terasort_spark.operators.wave19 import (
+    from terasort_spark.operators.aggregates import (
         _DECAY_HALFLIFE_DAYS,
         _DECAY_MAX_STEPS,
         _DECAY_SCALE,

@@ -95,7 +95,7 @@ def test_mrr_metrics_bounded_and_consistent(spark, sf_dir):
 
 
 def test_reservoir_fixed_size_and_partition_invariant(spark, sf_dir):
-    from terasort_spark.operators.wave7 import _RESERVOIR_K
+    from terasort_spark.operators.curation import _RESERVOIR_K
 
     out = _Q["sample_reservoir"](spark, sf_dir).collect()
     n_docs = table(spark, sf_dir, "documents").count()
@@ -115,7 +115,7 @@ def test_reservoir_plan_is_take_ordered_not_global_sort(spark, sf_dir):
 
 
 def test_scenecut_matches_local_replay(spark, sf_dir):
-    from terasort_spark.operators.wave7 import _CUT_HAMMING, _FRAME_BYTES
+    from terasort_spark.operators.multimodal import _CUT_HAMMING, _FRAME_BYTES
 
     out = {
         (r["doc_id"], r["frame_idx"]): r["hamming"]

@@ -12,11 +12,8 @@ import hashlib
 from pyspark.sql import functions as F
 
 from terasort_spark.catalog import table
-from terasort_spark.operators.wave8 import (
-    BLOOM_K,
-    CONTAIN_EST_TAU,
-    _bloom_m,
-)
+from terasort_spark.operators.llm_dedup import BLOOM_K, _bloom_m
+from terasort_spark.operators.llm_text import CONTAIN_EST_TAU
 from terasort_spark.registry import queries
 
 _Q = queries()
@@ -218,7 +215,7 @@ def test_fuzzy_ingest_drops_are_admissible(spark, sf_dir):
     every DROP has a verified EXISTING-corpus partner at exact
     Jaccard >= 0.8 (no hash/banding choice can fabricate one); kept +
     dropped partition the batch."""
-    from terasort_spark.operators.wave8 import FUZZY_TAU
+    from terasort_spark.operators.llm_dedup import FUZZY_TAU
 
     docs = {
         r["doc_id"]: set((r["text"] or "").lower().split(" "))
