@@ -1425,7 +1425,7 @@ def agg_percentile_approx_native(spark, sf_dir):
     """Native ``percentile_approx`` exhibit (NOT registered: its
     KLL-style sketch state is engine-private, so no cross-engine oracle
     exists; accuracy vs the exact percentile is pinned in
-    tests/test_extras.py). The registered ``agg_percentile_approx``
+    tests/test_modern.py). The registered ``agg_percentile_approx``
     below keeps the approximate-quantile SEMANTICS but swaps in a
     portable deterministic sketch that hash-grades against DuckDB."""
     return (
