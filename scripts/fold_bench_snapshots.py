@@ -10,10 +10,11 @@ Each IN file is either a full-sweep sidecar (BENCH_QUERIES.latest.json
 shape: {"queries": {...}}) or a bare {"name": seconds} map (hand-built
 from gate solo adjudications / quiet BENCH_ONLY re-times — same solo
 fresh-JVM protocol). The output records per-query MIN and the fold's
-provenance. Rationale: this host carries bursty external co-tenant
-load (BASELINE.md); a per-query min across repeated same-protocol runs
-converges on the query's cost, while any single sweep carries 2-8x
-phantom inflation on whichever chunks a burst hit.
+provenance, and carries ``"folded": true``: its values are minima of
+medians, not one sweep's medians. Rationale: this host carries bursty
+external co-tenant load (BASELINE.md); a per-query min across repeated
+same-protocol runs converges on the query's cost, while any single
+sweep carries 2-8x phantom inflation on whichever chunks a burst hit.
 """
 
 from __future__ import annotations
@@ -23,6 +24,8 @@ import sys
 
 
 def main() -> None:
+    if len(sys.argv) < 3:
+        sys.exit("usage: python scripts/fold_bench_snapshots.py OUT.json IN1.json [IN2.json ...]")
     out_path, *in_paths = sys.argv[1:]
     folded: dict[str, float] = {}
     sources = []
@@ -32,7 +35,7 @@ def main() -> None:
         qs = doc.get("queries", doc)
         n_used = 0
         for name, med in qs.items():
-            if not isinstance(med, (int, float)) or med <= 0:
+            if isinstance(med, bool) or not isinstance(med, (int, float)) or med <= 0:
                 continue
             if med < folded.get(name, float("inf")):
                 folded[name] = med
@@ -45,6 +48,7 @@ def main() -> None:
         "sf": 0.1,
         "n_queries": len(folded),
         "missing": [],
+        "folded": True,
         "fold": "per-query min across same-protocol runs",
         "fold_sources": sources,
     }

@@ -30,7 +30,9 @@ from __future__ import annotations
 import os
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark import TaskContext
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -122,6 +124,27 @@ def terasort(df: DataFrame, n_partitions: int = 32) -> DataFrame:
     return df.repartitionByRange(n_partitions, "key").sortWithinPartitions("key")
 
 
+def _record_block(batch: pa.RecordBatch) -> bytes:
+    """One Arrow batch of (key, value) as its raw 100-byte records: each
+    column cast to fixed width, viewed as an (n, width) byte matrix, the
+    two matrices side by side. A null or a wrong-length field would
+    shift every later record off the 100-byte framing, so it raises."""
+    blocks = []
+    for name, width in (("key", KEY_LEN), ("value", VALUE_LEN)):
+        col = batch.column(name)
+        if col.null_count:
+            raise ValueError(f"tera record {name} is null; expected {width} bytes")
+        try:
+            fixed = col.cast(pa.binary(width))
+        except pa.ArrowInvalid:
+            raise ValueError(f"tera record {name} is not {width} bytes long") from None
+        data = np.frombuffer(
+            fixed.buffers()[1], np.uint8, len(fixed) * width, fixed.offset * width
+        )
+        blocks.append(data.reshape(-1, width))
+    return np.hstack(blocks).tobytes()
+
+
 def write_tera_files(sorted_df: DataFrame, out_dir: str) -> list[str]:
     """R5 sink contract (reconstructed pub:TeraOutputFormat semantics —
     SURVEY.md §2a): one file per partition of raw concatenated 100-byte
@@ -134,33 +157,47 @@ def write_tera_files(sorted_df: DataFrame, out_dir: str) -> list[str]:
     non-shared-fs cluster would need Hadoop FileSystem APIs here, as
     the reference TeraOutputFormat uses. Empty partitions still emit a
     (zero-byte) file, matching Hadoop's behavior. Returns paths in
-    index order."""
+    index order.
+
+    ``mapInArrow`` hands each task its partition's rows as Arrow
+    batches; every batch is written as one block of records
+    (``_record_block``), with no per-row Python. A null or wrong-length
+    key or value raises ``ValueError`` in the task."""
     os.makedirs(out_dir, exist_ok=True)
 
-    def write_partition(idx: int, rows) -> Iterator[tuple[int, str]]:
+    def write_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        idx = TaskContext.get().partitionId()
         path = os.path.join(out_dir, f"part-{idx:05d}.dat")
         with open(path, "wb") as f:
-            for row in rows:
-                f.write(bytes(row["key"]))
-                f.write(bytes(row["value"]))
-        yield (idx, path)
+            for batch in batches:
+                f.write(_record_block(batch))
+        yield pa.RecordBatch.from_pydict({"index": [idx], "path": [path]})
 
-    paths = dict(sorted_df.rdd.mapPartitionsWithIndex(write_partition).collect())
-    return [paths[i] for i in sorted(paths)]
+    written = (
+        sorted_df.select("key", "value")
+        .mapInArrow(write_partition, "index long, path string")
+        .collect()
+    )
+    return [r["path"] for r in sorted(written, key=lambda r: r["index"])]
 
 
 def read_tera_files(spark: SparkSession, out_dir: str) -> DataFrame:
     """R1 source contract (reconstructed pub:TeraInputFormat semantics):
     fixed-width 100-byte binary records → (key BINARY, value BINARY)
-    rows. ``binaryRecords`` splits exactly at record boundaries and
-    parallelizes by file, so a 100 TB directory scans with the same
-    code; the 10/90 key/value split happens JVM-side off each record."""
-    rdd = spark.sparkContext.binaryRecords(
-        os.path.join(out_dir, "part-*.dat"), RECORD_LEN
-    )
-    return spark.createDataFrame(
-        rdd.map(lambda b: (b[:KEY_LEN], b[KEY_LEN:])),
-        schema="key binary, value binary",
+    rows. ``binaryRecords`` splits exactly at record boundaries, keeps
+    the part files in index order and parallelizes by file, so a 100 TB
+    directory scans with the same code. The records become a Dataset in
+    the JVM (``Encoders.BINARY``) and the 10/90 key/value split is a
+    ``substring`` on each, so no record passes through a Python worker.
+    A file whose size is not a multiple of 100 bytes fails the read."""
+    sc = spark.sparkContext
+    records = sc._jsc.binaryRecords(os.path.join(out_dir, "part-*.dat"), RECORD_LEN)
+    jdf = spark._jsparkSession.createDataset(
+        records.rdd(), sc._jvm.org.apache.spark.sql.Encoders.BINARY()
+    ).toDF()
+    return DataFrame(jdf, spark).select(
+        F.substring("value", 1, KEY_LEN).alias("key"),
+        F.substring("value", KEY_LEN + 1, VALUE_LEN).alias("value"),
     )
 
 

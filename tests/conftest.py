@@ -12,7 +12,12 @@ SF_DIR = os.environ.get("TEST_SF_DIR", "/root/testdata/sf0.001")
 # pytest.ini's addopts deselects `slow` (and `rocksdb`) by default;
 # `make test-all` runs everything. Durations measured 2026-08-18
 # (--durations=250, full suite 37.4 min): the sets below carry ~20 min
-# of it while the default tier keeps every oracle-correctness test.
+# of it. The default tier keeps every per-query oracle test; the slow set
+# does hold four result-equivalence tests:
+# test_stream_left_outer_join_equals_batch,
+# test_stream_lsh_equals_sequential_batch_twin,
+# test_partition_count_invariance_of_sensitive_queries and
+# test_quartile_histogram_machinery_equals_ntile.
 
 # Whole modules: degenerate-input robustness sweeps over the full
 # registry and streaming checkpoint-recovery e2e — crash-robustness CI,
@@ -23,7 +28,8 @@ _SLOW_MODULES = {
     "test_stream_recovery",
 }
 
-# Individual heavyweights (>13 s measured, none oracle-correctness):
+# Individual heavyweights (>13 s measured; four are the equivalence
+# tests named above):
 _SLOW_TESTS = {
     "test_no_nested_output_types",  # builds all 341 plans: 178 s
     "test_stream_left_outer_join_equals_batch",  # 85 s + 46 s

@@ -4,13 +4,21 @@ count and content preserved — invariants, not golden files."""
 
 from __future__ import annotations
 
+import os
+import random
+
+import pytest
+
 from terasort_spark.sources.teragen import (
     KEY_LEN,
+    RECORD_LEN,
     VALUE_LEN,
     checksum,
+    read_tera_files,
     teragen,
     terasort,
     teravalidate,
+    write_tera_files,
 )
 
 N = 200_000
@@ -69,14 +77,6 @@ def test_tera_file_roundtrip(spark, tmp_path):
     100-byte records → fixed-width binary part files on disk → re-read
     via binaryRecords → TeraValidate holds ACROSS the file boundary and
     the content checksum survives the round trip."""
-    import os
-
-    from terasort_spark.sources.teragen import (
-        RECORD_LEN,
-        read_tera_files,
-        write_tera_files,
-    )
-
     n, parts = 50_000, 8
     gen = teragen(spark, n, n_partitions=4)
     in_checksum = checksum(gen)
@@ -184,3 +184,78 @@ def test_teragen_datasource_plugin(spark):
     v = teravalidate(terasort(df, n_partitions=5))
     assert v["n_rows"] == 20_000
     assert v["sorted_within"] and v["sorted_between"]
+
+
+def test_tera_files_roundtrip_is_byte_exact(spark, tmp_path):
+    """Arbitrary bytes, 0x00 and 0xFF included, survive the Arrow
+    writer and the JVM-side reader: the part files, and the rows read
+    back, are the sorted input byte for byte."""
+    rng = random.Random(7)
+    keys = {b"\x00" * KEY_LEN, b"\xff" * KEY_LEN, b"\x00\xff" * (KEY_LEN // 2)}
+    while len(keys) < 1000:
+        keys.add(rng.randbytes(KEY_LEN))
+    records = [k + rng.randbytes(VALUE_LEN) for k in keys]
+    df = spark.createDataFrame(
+        [(r[:KEY_LEN], r[KEY_LEN:]) for r in records], "key binary, value binary"
+    )
+    out_dir = str(tmp_path / "bytes")
+    paths = write_tera_files(terasort(df, 4), out_dir)
+
+    expected = b"".join(sorted(records))
+    assert len(paths) == 4
+    on_disk = b""
+    for p in paths:
+        with open(p, "rb") as f:
+            on_disk += f.read()
+    assert on_disk == expected
+    back = read_tera_files(spark, out_dir).collect()
+    assert b"".join(bytes(r["key"]) + bytes(r["value"]) for r in back) == expected
+
+
+def test_write_tera_files_keeps_empty_partitions(spark, tmp_path):
+    """Every partition writes its part file, an empty one a zero-byte
+    file, so the file count is the partition count."""
+    paths = write_tera_files(teragen(spark, 3, 1).repartition(8), str(tmp_path / "e"))
+    assert [os.path.basename(p) for p in paths] == [f"part-{i:05d}.dat" for i in range(8)]
+    sizes = [os.path.getsize(p) for p in paths]
+    assert sorted(sizes) == [0] * 5 + [RECORD_LEN] * 3, sizes
+
+
+@pytest.mark.parametrize(
+    "key,value,message",
+    [
+        (b"123456789", b"x" * VALUE_LEN, "key is not 10 bytes"),
+        (b"1234567890", b"x" * (VALUE_LEN + 1), "value is not 90 bytes"),
+        (None, b"x" * VALUE_LEN, "key is null"),
+        (b"1234567890", None, "value is null"),
+    ],
+    ids=["short_key", "long_value", "null_key", "null_value"],
+)
+def test_write_tera_files_rejects_misframed_records(spark, tmp_path, key, value, message):
+    """A record that is not exactly 10 + 90 bytes would shift every later
+    record in its file off the 100-byte framing; the writer refuses it
+    instead of writing it."""
+    df = spark.createDataFrame([(key, value)], "key binary, value binary")
+    with pytest.raises(Exception, match=f"ValueError: tera record {message}"):
+        write_tera_files(df, str(tmp_path / "bad"))
+
+
+def test_read_tera_files_rejects_partial_record(spark, tmp_path):
+    """A part file whose size is not a multiple of 100 bytes holds a
+    torn record: the read fails instead of dropping or padding it."""
+    out_dir = tmp_path / "torn"
+    out_dir.mkdir()
+    (out_dir / "part-00000.dat").write_bytes(b"k" * (RECORD_LEN + RECORD_LEN // 2))
+    with pytest.raises(Exception, match="EOFException"):
+        read_tera_files(spark, str(out_dir)).count()
+
+
+def test_read_tera_files_runs_without_python_worker(spark, tmp_path):
+    """The reader builds its rows in the JVM: no PythonRDD in the
+    lineage, so reading a directory starts no Python stage."""
+    out_dir = str(tmp_path / "lineage")
+    write_tera_files(teragen(spark, 100, 2), out_dir)
+    df = read_tera_files(spark, out_dir)
+    lineage = df._jdf.queryExecution().toRdd().toDebugString()
+    assert "PythonRDD" not in lineage, lineage
+    assert df.count() == 100
